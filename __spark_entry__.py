@@ -6115,6 +6115,13 @@ _CHANGED_THIS_ROUND = [
     # isNotNull): real plan change, oracle re-proven bit-exact locally,
     # queued for a driver row.
     "curation_v3",
+    # Tick-store read path: every Table read takes its schema from the
+    # sidecar instead of footer inference, and ohlcv(every=...) buckets
+    # on epoch-nanos with bars assembled on the driver.  The full
+    # bit-exact check_correctness sweep on the changed tree is the
+    # local proof; these two run the changed code directly.
+    "server_ohlcv",
+    "table_merge",
 ]
 
 # Rule-1 pressure valve, used ONLY when the window is over-subscribed:
@@ -6338,8 +6345,6 @@ _CHANGED_BUT_LOCALLY_PROVEN = {
                               "mirror green on the r16 tree"),
     "multimodal_video": ("GIF fixtures never reach the webp/tiff "
                          "branches; bit-exact mirror green"),
-    "server_ohlcv": ("closure edge via shared helper names only; "
-                     "server path untouched; bit-exact mirror green"),
     # (table_lifecycle's r16 entry removed: the r17 vacuum
     # keep_versions diff queues it in _CHANGED_THIS_ROUND instead —
     # a gate may not be both exempted and queued.)

@@ -349,7 +349,7 @@ def _one_attempt(sf_dir: str) -> dict:
     # A/B figure so future drift is visible in the artifact without
     # gating the degraded verdict on an unbanded metric.
     ss = write_tp.get("stream_sink")
-    if isinstance(ss, int):
+    if isinstance(ss, (int, float)):
         canary["stream_sink"] = ss
         canary["stream_sink_ref_floor"] = 700_000
         canary["stream_sink_below_ref"] = ss < 700_000

@@ -88,6 +88,111 @@ class TestOhlcvEndpoint:
         assert a["v"] == [10, 20, 30, 40]
 
 
+def sort_array_body(table, lo, hi, symbols=None, every=None):
+    """The endpoint body as a Spark-side grouping builds it: window
+    resample, then ``sort_array(collect_list(struct))`` per symbol —
+    the oracle the driver-side assembly must reproduce."""
+    from pyspark.sql import functions as F
+
+    from zdb_spark.functions.scalar import ts_to_nanos
+    from zdb_spark.ohlcv import OHLCV_COLS, parse_every
+
+    df = ohlcv_frame(table, lo, hi, symbols)
+    if every is not None:
+        df = (resample(df, parse_every(every))
+              .select(ts_to_nanos(F.col("bucket_start")).alias("ts"),
+                      "sym", *OHLCV_COLS))
+    rows = (df.groupBy("sym")
+            .agg(F.sort_array(F.collect_list(F.struct("ts", *OHLCV_COLS)))
+                 .alias("bars"))
+            .collect())
+    results = {r["sym"]: {k: [b[i] for b in r["bars"]]
+                          for i, k in enumerate("tohlcv")} for r in rows}
+    ts = [t for b in results.values() for t in b["t"]]
+    return {"results": results, "min_date": min(ts, default=None),
+            "max_date": max(ts, default=None)}
+
+
+def comparable(body):
+    """repr() per value, so NaN compares equal to NaN."""
+    return ({k: {f: [repr(x) for x in v] for f, v in b.items()}
+             for k, b in body["results"].items()},
+            body["min_date"], body["max_date"])
+
+
+class TestDriverAssembly:
+    """ohlcv() splits the collected long-form bars into per-symbol arrays
+    on the driver; every body must equal the Spark-side grouping's."""
+
+    @pytest.fixture()
+    def edge_table(self, spark, tmp_home):
+        t = Table.create(spark, bar_schema("edges"), home=tmp_home)
+        nan = float("nan")
+        rows = [
+            # one ts, several bars: ties ordered by the remaining fields,
+            # nulls first and NaN last, as sort_array orders structs
+            (T0, "TIE", 2.0, 3.0, 1.0, 2.5, 10),
+            (T0, "TIE", 1.0, 3.0, 1.0, 2.5, 10),
+            (T0, "TIE", None, 3.0, 1.0, 2.5, 10),
+            (T0, "TIE", nan, 3.0, 1.0, 2.5, 10),
+            (T0, "TIE", 1.0, 3.0, 1.0, 2.5, 5),
+            (T0 + MIN, "TIE", 4.0, 5.0, 3.0, 4.5, None),
+            (T0 + 2 * MIN, None, 7.0, 8.0, 6.0, 7.5, 3),
+            (T0 + 3 * MIN, None, 8.0, 9.0, 7.0, 8.5, 4),
+            (T0 + 3 * MIN, "B", 9.0, 9.0, 9.0, 9.0, 1),
+        ]
+        t.write(spark.createDataFrame(
+            rows, "ts long, sym string, open double, high double, "
+                  "low double, close double, volume long"))
+        return t
+
+    @pytest.fixture()
+    def pre_epoch_table(self, spark, tmp_home):
+        t = Table.create(spark, bar_schema("pre"), home=tmp_home)
+        ts = [-2 * NS - 1, -NS - 1_500, -NS, -1_000_001, -1_500, -500,
+              0, 999, NS + 1]
+        t.write(spark.createDataFrame(
+            [(v, "S" if i % 3 else "T", float(i), i + 1.0, i - 1.0,
+              i + 0.5, i) for i, v in enumerate(ts)],
+            "ts long, sym string, open double, high double, "
+            "low double, close double, volume long"))
+        return t
+
+    def test_ties_null_symbol_and_nan(self, edge_table):
+        got = ohlcv(edge_table, T0, T0 + 10 * MIN)
+        assert comparable(got) == comparable(
+            sort_array_body(edge_table, T0, T0 + 10 * MIN))
+        tie = got["results"]["TIE"]
+        assert [repr(x) for x in tie["o"][:4]] == \
+            ["None", "1.0", "1.0", "2.0"]
+        assert tie["v"][1:3] == [5, 10]
+        assert repr(tie["o"][4]) == "nan"
+        assert list(got["results"]) == [None, "B", "TIE"]
+        assert (got["min_date"], got["max_date"]) == (T0, T0 + 3 * MIN)
+
+    @pytest.mark.parametrize("every", ["2m", "1h"])
+    def test_resampled_null_symbol(self, edge_table, every):
+        assert comparable(ohlcv(edge_table, T0, T0 + 10 * MIN,
+                                every=every)) == comparable(
+            sort_array_body(edge_table, T0, T0 + 10 * MIN, every=every))
+
+    @pytest.mark.parametrize("every", [None, "1ms", "1s", "1d"])
+    def test_pre_epoch_buckets(self, pre_epoch_table, every):
+        lo, hi = -3 * NS, 2 * NS
+        got = ohlcv(pre_epoch_table, lo, hi, every=every)
+        assert comparable(got) == comparable(
+            sort_array_body(pre_epoch_table, lo, hi, every=every))
+        if every == "1s":
+            assert got["results"]["S"]["t"] == [-2 * NS, -NS, 0, NS]
+
+    @pytest.mark.parametrize("every", [None, "5m"])
+    def test_empty_range(self, edge_table, every):
+        got = ohlcv(edge_table, T0 + 30 * MIN, T0 + 40 * MIN, every=every)
+        assert got == {"results": {}, "min_date": None, "max_date": None}
+        assert got == sort_array_body(edge_table, T0 + 30 * MIN,
+                                      T0 + 40 * MIN, every=every)
+
+
 class TestResample:
     def test_bars_to_coarser_bars(self, bar_table):
         out = (resample(bar_table.scan(), "2 minutes")

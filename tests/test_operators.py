@@ -58,6 +58,16 @@ class TestMinhashLSH:
             assert abs(r["est_jaccard"] - r["jaccard"]) < 0.35
 
 
+    def test_validation(self, docs):
+        for bands in (0, -4, 5):
+            with pytest.raises(ValueError, match="positive divisor"):
+                dedup.minhash_signature(docs, "text", num_hashes=64,
+                                        bands=bands)
+            with pytest.raises(ValueError, match="positive divisor"):
+                dedup.minhash_lsh_pairs(docs, "text", "doc_id",
+                                        num_hashes=64, bands=bands)
+
+
 class TestMinhashSignatureKernel:
     def test_bit_equal_to_jvm_expression(self, spark):
         """The Arrow numpy XXH64 kernel (r18) must be BIT-IDENTICAL to
@@ -121,6 +131,19 @@ class TestMinhashSignatureKernel:
         want = {row["doc_id"]: (row["minhash"], row["ref_bh"])
                 for row in ref.collect()}
         assert got == want
+
+    def test_kernel_wraps_without_overflow_warnings(self):
+        """The kernel's uint64 wrap is intended; it must not print a
+        RuntimeWarning per batch (numpy warns on scalar overflow)."""
+        import warnings
+
+        import pandas as pd
+
+        kernel = dedup._xxh64_sig_udf(16, 4).func
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            out = kernel(pd.Series([[7, -3, 12345678901234], [], None]))
+        assert len(out) == 3 and len(out[0]) == 16 + 4
 
     def test_kernel_null_and_empty_shingle_edges(self, spark):
         """The kernel's null path, exercised DIRECTLY (no text reaches

@@ -491,6 +491,104 @@ class TestScan:
         assert t.scan(base.isoformat(), str(T0 + DAY)).count() == 2
 
 
+class TestReadSchema:
+    """Reads take their schema from the sidecar instead of letting Spark
+    infer it from Parquet footers: the frame a reader sees must not
+    change, and building it must launch no Spark job."""
+
+    @staticmethod
+    def every_type_schema(name, partition_by=PartitionBy.DAY,
+                          strict_u64=False):
+        sc = Schema(name).with_partition_by(partition_by)
+        for ct in ColumnType:
+            if ct is not ColumnType.TIMESTAMP:
+                sc = sc.add_col(f"c_{ct.value}", ct)
+        sc.strict_u64 = strict_u64
+        return sc
+
+    @staticmethod
+    def every_type_rows(spark, t, ts_list):
+        # write() casts every column to its declared type; row 1 is null
+        # in every non-symbol data column
+        cols = t.schema.columns
+        ddl = ", ".join(f"{c.name} {'string' if c.is_symbol else 'long'}"
+                        for c in cols)
+        return spark.createDataFrame(
+            [(ts, *(f"s{i}" if c.is_symbol else None if i == 1 else i
+                    for c in cols[1:]))
+             for i, ts in enumerate(ts_list)], ddl)
+
+    @staticmethod
+    def footer_schema(spark, t):
+        p = os.path.join(t.path, "parquet")
+        if not t._meta.manifest:
+            return spark.read.parquet(p).schema
+        files = t._latest_manifest()[1]
+        return (spark.read.option("basePath", p)
+                .parquet(*[os.path.join(p, f) for f in files]).schema)
+
+    @pytest.mark.parametrize("manifest,partition_by,strict_u64", [
+        (True, PartitionBy.DAY, False),
+        (False, PartitionBy.DAY, False),
+        (True, PartitionBy.DAY, True),
+        (False, PartitionBy.YEAR, True),
+        (True, PartitionBy.NONE, False),
+    ])
+    def test_df_schema_equals_footer_inference(
+            self, spark, tmp_home, manifest, partition_by, strict_u64):
+        t = Table.create(spark, self.every_type_schema(
+            "rs", partition_by, strict_u64), home=tmp_home,
+            manifest=manifest)
+        t.write(self.every_type_rows(spark, t, [T0, T0 + 1, T0 + DAY]))
+        want = self.footer_schema(spark, t)
+        assert t.df().schema == want
+        assert t.scan(T0, T0 + DAY).schema == t.scan().schema
+        assert t.df().count() == 3
+        # dt keeps its directory-inferred type: DATE for day partitions
+        dt_type = {PartitionBy.DAY: "date", PartitionBy.YEAR: "int",
+                   PartitionBy.NONE: "string"}[partition_by]
+        assert want["dt"].dataType.simpleString() == dt_type
+
+    def test_plan_build_launches_no_job(self, spark, tmp_home):
+        t = Table.create(spark, make_schema(), home=tmp_home,
+                         manifest=True)
+        for i in range(3):
+            t.write(rows_df(spark, [T0 + i * DAY]))
+        sc = spark.sparkContext
+        sc.setJobGroup("zdb-read-plan", "plan build only")
+        try:
+            t.scan(T0, T0 + 2 * DAY, ["ts", "price"]).schema
+            t.df().schema
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(
+            "zdb-read-plan")) == []
+
+    @pytest.mark.parametrize("manifest", [True, False])
+    def test_evolved_schema_unchanged(self, spark, tmp_home, manifest):
+        """Evolved tables read ``dt`` as a STRING and a defaulted added
+        column as non-nullable — pinned as they were before reads took
+        the sidecar schema for every table."""
+        from pyspark.sql.types import (DoubleType, LongType, StringType,
+                                       StructField, StructType)
+
+        t = Table.create(spark, make_schema(), home=tmp_home,
+                         manifest=manifest)
+        t.write(rows_df(spark, [T0, T0 + DAY]))
+        t.add_column("venue", ColumnType.SYMBOL8, default="UNK")
+        t.add_column("fee", ColumnType.F64)
+        t.drop_column("size")
+        assert t.df().schema == StructType([
+            StructField("ts", LongType()),
+            StructField("sym", StringType()),
+            StructField("price", DoubleType()),
+            StructField("venue", StringType(), False),
+            StructField("fee", DoubleType()),
+            StructField("dt", StringType()),
+        ])
+        assert {r["venue"] for r in t.df().collect()} == {"UNK"}
+
+
 class TestCompaction:
     def test_compact_merges_small_files(self, spark, tmp_home):
         t = Table.create(spark, make_schema(), home=tmp_home)
@@ -683,6 +781,16 @@ class TestSymbols:
         t = Table.create(spark, make_schema(), home=tmp_home)
         with pytest.raises(ValueError, match="not a symbol"):
             t.symbols("price")
+
+    def test_null_symbol_sorts_first(self, spark, tmp_home):
+        """Sorted on the driver, but in the order an ascending Spark
+        sort gives: a null symbol first, then byte order."""
+        t = Table.create(spark, make_schema(), home=tmp_home)
+        t.write(spark.createDataFrame(
+            [(T0 + i, s, 1.0, 1) for i, s in
+             enumerate(["b", None, "B", "a", None, "Ä", "B"])],
+            "ts long, sym string, price double, size long"))
+        assert t.symbols("sym") == [None, "B", "a", "b", "Ä"]
 
     def test_symbol_codes_one_based_zero_absent(self, spark, tmp_home):
         # reference contract (read.rs:71-73): 1-based codes, 0 = absent

@@ -28,9 +28,10 @@ from __future__ import annotations
 
 import argparse
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # gate -> reason a flagged pattern is deliberate and bounded
 _WAIVED: dict[str, str] = {

@@ -17,9 +17,10 @@ Usage: python tools/train_pca_literal.py [--sf-dir DIR] [--q 4]
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:

@@ -13,12 +13,14 @@ Usage: python tools/verified_age.py [--repo DIR]
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--repo", default="/root/repo")
+    ap.add_argument("--repo", default=os.path.dirname(
+        os.path.dirname(os.path.abspath(__file__))))
     ap.add_argument("--project", action="store_true",
                     help="also project post-round ages assuming every "
                          "window gate (and every sub-gate a window "

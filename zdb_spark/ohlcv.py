@@ -19,6 +19,10 @@ Scale notes:
   product; the nested-arrays JSON shape is assembled only at the API
   boundary (driver-side) because it is per-symbol collect — fine for an
   HTTP chart endpoint, wrong as a distributed operator.
+- ``ohlcv()`` runs at most one aggregation: ``every`` buckets on the
+  epoch-nanos themselves (``ts - pmod(ts, every_ns)``), and the
+  per-symbol arrays are built on the driver from the collected long-form
+  rows — the same bars a grouping shuffle would have shipped there.
 - ``first/last within bucket`` use ``min_by(open, ts)`` / ``max_by(close,
   ts)`` rather than window functions: single-pass aggregation instead of a
   sort per partition, and deterministic because (ts) is unique per (sym,
@@ -48,6 +52,13 @@ _EVERY_UNITS = {
     "h": "hours", "hour": "hours", "hours": "hours",
     "d": "days", "day": "days", "days": "days",
 }
+
+
+# nanoseconds per duration unit, largest first; each is a whole number
+# of microseconds, so nanosecond buckets match Spark's µs windows exactly
+_UNIT_NS = {"days": 86_400 * 10**9, "hours": 3_600 * 10**9,
+            "minutes": 60 * 10**9, "seconds": 10**9,
+            "milliseconds": 10**6, "microseconds": 10**3}
 
 
 def parse_every(every: str) -> str:
@@ -84,6 +95,12 @@ def ohlcv_frame(table: Table, from_ts, to_ts, symbols: list[str] | None = None,
     return df.withColumn("volume", F.col("volume").cast("long"))
 
 
+def _asc(v):
+    """Sort key of one value in Spark's ascending order: nulls first,
+    NaN after every number (and -0.0 equal to 0.0, as in Python)."""
+    return (0, 0) if v is None else (1, 1) if v != v else (1, 0, v)
+
+
 def ohlcv(table: Table, from_ts, to_ts, symbols: list[str] | None = None,
           symbol_col: str = "sym", every: str | None = None) -> dict:
     """API-shape result: ``{results: {SYM: {t,o,h,l,c,v}}, min_date,
@@ -93,9 +110,11 @@ def ohlcv(table: Table, from_ts, to_ts, symbols: list[str] | None = None,
     reference's unimplemented ``TODO: duration like 5Minutes``
     (/root/reference/src/server/ohlcv.rs:56), accepted in that spelling
     plus "5m"/"1h"/Spark duration words; ``t`` then holds bucket-start
-    nanos.  Grouping into per-symbol parallel arrays happens in ONE
-    aggregation (sort_array over collected structs), so Spark still does
-    the heavy lifting; only the final per-symbol arrays hit the driver.
+    nanos.  That bucketing is the only aggregation: the long-form bars
+    are collected as they are and split into per-symbol parallel
+    arrays on the driver, each symbol's bars in ``sort_array`` order
+    over the ``(t, o, h, l, c, v)`` struct, symbols sorted with a null
+    symbol first.
 
     BOUNDED DRIVER MATERIALIZATION: this is the API endpoint — the
     return value is a JSON-shaped dict, so every requested bar crosses
@@ -109,40 +128,26 @@ def ohlcv(table: Table, from_ts, to_ts, symbols: list[str] | None = None,
     ts = table.schema.ts_col
     df = ohlcv_frame(table, from_ts, to_ts, symbols, symbol_col)
     if every is not None:
-        from .functions.scalar import ts_to_nanos
-
-        df = (resample(df, parse_every(every), ts_col=ts,
-                       symbol_col=symbol_col)
-              .select(ts_to_nanos(F.col("bucket_start")).alias(ts),
-                      F.col(symbol_col), *OHLCV_COLS)
-              .withColumn("volume", F.col("volume").cast("long")))
-    grouped = (df.groupBy(symbol_col)
-               .agg(F.sort_array(F.collect_list(F.struct(
-                   ts, *OHLCV_COLS))).alias("bars"),
-                   F.min(ts).alias("_lo"), F.max(ts).alias("_hi")))
-    rows = grouped.collect()
+        n, unit = parse_every(every).split()
+        every_ns = int(n) * _UNIT_NS[unit]
+        bucket = F.col(ts) - F.pmod(F.col(ts), F.lit(every_ns))
+        df = df.groupBy(bucket.alias(ts), symbol_col).agg(*_ohlcv_aggs(ts))
+    bars: dict = {}
+    for r in df.select(ts, symbol_col, *OHLCV_COLS).collect():
+        bars.setdefault(r[1], []).append((r[0], *r[2:]))
     results: dict[str, dict[str, list]] = {}
-    lo_all, hi_all = None, None
-    for r in rows:
-        bars = r["bars"]
-        results[r[symbol_col]] = {
-            "t": [b[ts] for b in bars],
-            "o": [b["open"] for b in bars],
-            "h": [b["high"] for b in bars],
-            "l": [b["low"] for b in bars],
-            "c": [b["close"] for b in bars],
-            "v": [b["volume"] for b in bars],
-        }
-        lo_all = r["_lo"] if lo_all is None else min(lo_all, r["_lo"])
-        hi_all = r["_hi"] if hi_all is None else max(hi_all, r["_hi"])
+    for sym in sorted(bars, key=_asc):
+        cols = zip(*sorted(bars[sym], key=lambda b: tuple(map(_asc, b))))
+        results[sym] = dict(zip("tohlcv", map(list, cols)))
     # min_date/max_date are i64 epoch nanos, matching the reference's
     # OHLCVsResponse struct exactly (ohlcv.rs:40-45) — the bundled UI
     # (frontend.py drawChart) also scales them as nanos; a date string
     # here broke both parity and the chart's x-axis.
     return {
         "results": results,
-        "min_date": lo_all,
-        "max_date": hi_all,
+        "min_date": min((b["t"][0] for b in results.values()), default=None),
+        "max_date": max((b["t"][-1] for b in results.values()),
+                        default=None),
     }
 
 
@@ -152,9 +157,7 @@ def duration_of_nanos(ns: int) -> str:
     Sub-microsecond resolutions cannot form a Spark window and raise."""
     if ns <= 0:
         raise ValueError(f"resolution must be positive, got {ns}")
-    for unit, width in (("days", 86_400 * 10**9), ("hours", 3_600 * 10**9),
-                        ("minutes", 60 * 10**9), ("seconds", 10**9),
-                        ("milliseconds", 10**6), ("microseconds", 10**3)):
+    for unit, width in _UNIT_NS.items():
         if ns % width == 0:
             return f"{ns // width} {unit}"
     raise ValueError(
@@ -198,30 +201,28 @@ def resample(df: DataFrame, every: str | None = None, ts_col: str = "ts",
     ts_utc = nanos_to_ts(ts_col) if ts_is_nanos else F.col(ts_col)
     w = F.window(ts_utc, every)
     keys = [w.alias("w")] + ([F.col(symbol_col)] if symbol_col else [])
-    if price_col is not None:
-        p = F.col(price_col)
-        aggs = [
-            F.min_by(p, F.col(ts_col)).alias("open"),
-            F.max(p).alias("high"),
-            F.min(p).alias("low"),
-            F.max_by(p, F.col(ts_col)).alias("close"),
-        ]
-    else:
-        aggs = [
-            F.min_by("open", F.col(ts_col)).alias("open"),
-            F.max("high").alias("high"),
-            F.min("low").alias("low"),
-            F.max_by("close", F.col(ts_col)).alias("close"),
-        ]
-    if volume_col:
-        aggs.append(F.sum(volume_col).alias("volume"))
-    out = df.groupBy(*keys).agg(*aggs)
+    out = df.groupBy(*keys).agg(*_ohlcv_aggs(ts_col, price_col,
+                                               volume_col))
     return out.select(F.col("w.start").alias("bucket_start"),
                       *([symbol_col] if symbol_col else []),
                       "open", "high", "low", "close",
                       *(["volume"] if volume_col else []))
 
 
+def _ohlcv_aggs(ts_col: str, price_col: str | None = None,
+                volume_col: str | None = "volume") -> list:
+    """The one OHLCV aggregate list: open/close at the min/max ts of the
+    bucket, high/low the max/min, volume summed.  Raw ticks read every
+    field from ``price_col``; stored bars (``price_col`` None)
+    re-aggregate their own open/high/low/close columns."""
+    o, h, lo, c = ((price_col,) * 4 if price_col is not None
+                   else ("open", "high", "low", "close"))
+    aggs = [F.min_by(o, F.col(ts_col)).alias("open"),
+            F.max(h).alias("high"), F.min(lo).alias("low"),
+            F.max_by(c, F.col(ts_col)).alias("close")]
+    if volume_col:
+        aggs.append(F.sum(volume_col).alias("volume"))
+    return aggs
 
 
 # threshold_bars moved to operators/temporal.py in r18 (hoisted for

@@ -149,6 +149,12 @@ def hashed_shingles(text: Column | str, k: int = 5) -> Column:
         F.transform(shingle_col(text, k), lambda s: F.xxhash64(s)))
 
 
+def _check_bands(num_hashes: int, bands: int) -> None:
+    if bands < 1 or num_hashes % bands:
+        raise ValueError("bands must be a positive divisor of num_hashes "
+                         f"(got num_hashes={num_hashes}, bands={bands})")
+
+
 def _xxh64_sig_udf(num_hashes: int, bands: int = 0):
     """Arrow-vectorized MinHash signature kernel: a pandas UDF mapping a
     hashed-shingle array column to the ``num_hashes``-wide signature,
@@ -228,8 +234,11 @@ def _xxh64_sig_udf(num_hashes: int, bands: int = 0):
             np.cumsum(ne_lens[:-1], out=starts[1:])
             base = t + P5 + np.uint64(4)
             mins = np.empty((num_hashes, len(ne_lens)), dtype=np.int64)
+            # i * P1 wraps mod 2^64 by design; array arithmetic wraps
+            # silently where numpy-scalar arithmetic warns
+            seeds = np.arange(num_hashes, dtype=np.uint64) * P1
             for i in range(num_hashes):
-                hi = base ^ (np.uint64(i) * P1)
+                hi = base ^ seeds[i]
                 hi = rotl(hi, 23) * P2 + P3
                 mins[i] = np.minimum.reduceat(
                     fmix(hi).view(np.int64), starts)
@@ -320,8 +329,8 @@ def minhash_signature(df: DataFrame, text_col: str = "text",
     the SINGLE materialized UDF output column (PythonUDF extraction
     dedups the one call — the captured plan shows one ArrowEvalPython).
     """
-    if bands is not None and num_hashes % bands:
-        raise ValueError("num_hashes must be divisible by bands")
+    if bands is not None:
+        _check_bands(num_hashes, bands)
     sig = _xxh64_sig_udf(num_hashes, bands or 0)
     sh = shingles_col if shingles_col is not None else "_zdb_sh_tmp"
     out = df.withColumn(sh, hashed_shingles(text_col, k))
@@ -400,8 +409,7 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     boilerplate floods that one bucket — see the module docstring for
     how to size the cap.
     """
-    if num_hashes % bands:
-        raise ValueError("num_hashes must be divisible by bands")
+    _check_bands(num_hashes, bands)
     # Materialize signatures+shingles ONCE: the candidate self-join would
     # otherwise duplicate the (large) minhash expression tree on both
     # sides of the join and recompute it per band row.  The hashed
@@ -495,8 +503,7 @@ def minhash_lsh_pairs_vs(df: DataFrame, other: DataFrame,
     ``minhash_lsh_pairs`` (shared helpers), so thresholds and recall
     characteristics transfer unchanged.
     """
-    if num_hashes % bands:
-        raise ValueError("num_hashes must be divisible by bands")
+    _check_bands(num_hashes, bands)
     oid = other_id_col or id_col
     base_a = (minhash_signature(df, text_col, num_hashes, k,
                                 shingles_col="_sh", bands=bands)
@@ -1224,8 +1231,7 @@ def build_minhash_store(df: DataFrame, path: str, text_col: str = "text",
     import json
     import os
 
-    if num_hashes % bands:
-        raise ValueError("num_hashes must be divisible by bands")
+    _check_bands(num_hashes, bands)
     _write_store_rows(df, path, num_hashes, bands, k, text_col, id_col,
                       mode="errorifexists")
     with open(os.path.join(path, "params.json"), "w") as f:

@@ -1028,7 +1028,6 @@ class Table:
                 .add("_change_type", "string"))
         if not added and not removed:
             return empty
-        _, _, read_files, _ = self._cow_read()
 
         def tagged(files, other, tag):
             if not files:
@@ -1039,7 +1038,7 @@ class Table:
             # consumer can union empty and non-empty batches
             # (ADVICE r17).
             def rd(fs):
-                return (read_files(fs)
+                return (self._read(fs)
                         .withColumn("dt", F.col("dt").cast("string"))
                         .select(*out_cols))
 
@@ -1350,7 +1349,7 @@ class Table:
                         "rewritten ambiguously; de-duplicate the source "
                         "on the merge key first")
 
-            src, base_files, read_files, rel = self._cow_read()
+            src, base_files, rel = self._cow_read()
             affected: dict[str, int] = {}
             if base_files:
                 # Manifest data skipping for the discovery semi-join
@@ -1385,7 +1384,7 @@ class Table:
                 # capture input_file_name AT SCAN TIME: evaluated after
                 # the join it returns '' (the joined stage no longer reads
                 # the file), which would map every hit to garbage paths
-                hits = (read_files(base_files)
+                hits = (self._read(base_files)
                         .withColumn("_f", F.input_file_name())
                         .join(skeys, on=keys, how="left_semi")
                         .groupBy("_f")
@@ -1416,7 +1415,7 @@ class Table:
             replaced: set[str] = set()
             if when_matched is not None and affected:
                 replaced = set(affected)
-                t = read_files(sorted(affected)).alias("t")
+                t = self._read(sorted(affected)).alias("t")
                 s = snorm.withColumn("_m", F.lit(True))
                 if broadcast_source:
                     s = F.broadcast(s)
@@ -1451,7 +1450,7 @@ class Table:
                     # all matching target rows live in affected files BY
                     # CONSTRUCTION, so the anti-join right side is the
                     # affected subset, not the whole table
-                    tk = read_files(sorted(affected)).select(*keys)
+                    tk = self._read(sorted(affected)).select(*keys)
                     ins = ins.join(tk, on=keys, how="left_anti")
                 missing = [c for c in data_cols if c not in ins.columns]
                 for c in list(missing):
@@ -1533,10 +1532,9 @@ class Table:
             snorm.unpersist()
 
     def _cow_read(self):
-        """``(src, base_files, read_files, rel)`` — the shared
-        snapshot-read machinery of the COW rewrite family
-        (``_rewrite_where``, ``merge_into``): an evolved-schema-aware
-        reader over the LATEST committed manifest plus the
+        """``(src, base_files, rel)`` — the shared snapshot machinery of
+        the COW rewrite family (``_rewrite_where``, ``merge_into``):
+        the LATEST committed manifest (read it with ``_read``) plus the
         file-uri→manifest-relative mapper.  ``rel`` uses realpath on
         BOTH sides (ADVICE r16): Spark reports RESOLVED file paths, so
         a symlinked component in the table root (/tmp → /private/tmp)
@@ -1546,24 +1544,13 @@ class Table:
 
         src = os.path.join(self.path, "parquet")
         _, base_files = self._latest_manifest()
-        evolved = bool(self._meta.added_defaults
-                       or self._meta.dropped_columns)
-        reader = self.spark.read
-        if evolved:
-            reader = reader.schema(self._read_schema())
-
-        def read_files(files: list[str]) -> DataFrame:
-            df = (reader.option("basePath", src)
-                  .parquet(*[os.path.join(src, f) for f in files]))
-            return self._apply_added_defaults(df) if evolved else df
-
         abs_src = os.path.realpath(src)
 
         def rel(uri: str) -> str:
             p = urllib.parse.unquote(urllib.parse.urlparse(uri).path)
             return os.path.relpath(os.path.realpath(p), abs_src)
 
-        return src, base_files, read_files, rel
+        return src, base_files, rel
 
     def _rewrite_where(self, condition, mode: str,
                        assignments: dict[str, object] | None) -> int:
@@ -1576,10 +1563,10 @@ class Table:
 
         cond = (F.expr(condition) if isinstance(condition, str)
                 else condition)
-        src, base_files, read_files, rel = self._cow_read()
+        src, base_files, rel = self._cow_read()
         if not base_files:
             return 0
-        self._reject_nondeterministic(read_files(base_files), cond,
+        self._reject_nondeterministic(self._read(base_files), cond,
                                       f"{mode}_where")
         # Manifest-level data skipping (r18, r17 verdict task 3): the
         # necessary ranges the predicate implies on the stats columns
@@ -1587,7 +1574,7 @@ class Table:
         # footer reads, O(live-file metadata) already in memory.  A
         # file skipped here provably contains no matching row, so the
         # affected set, the rewrite, and the accounting are unchanged.
-        bounds = self._predicate_bounds(read_files(base_files[:1]),
+        bounds = self._predicate_bounds(self._read(base_files[:1]),
                                         cond)
         if bounds:
             _, head = self._latest_head()
@@ -1595,7 +1582,7 @@ class Table:
                 base_files, self._stats_of_head(head), bounds)
             if not base_files:
                 return 0
-        hits = (read_files(base_files).where(cond)
+        hits = (self._read(base_files).where(cond)
                 .groupBy(F.input_file_name().alias("_f"))
                 .agg(F.count(F.lit(1)).alias("_n"))
                 .collect())
@@ -1606,12 +1593,12 @@ class Table:
         n_deleted = sum(affected.values())
         if mode == "delete":
             # survivors: NOT(cond IS TRUE) — NULL evaluations keep rows
-            survivors = (read_files(sorted(affected))
+            survivors = (self._read(sorted(affected))
                          .where(~cond.eqNullSafe(F.lit(True))))
         else:
             # update: pass every row through, assignments under the
             # TRUE branch only (NULL evaluations keep the old value)
-            base = read_files(sorted(affected))
+            base = self._read(sorted(affected))
             hit = cond.eqNullSafe(F.lit(True))
 
             def assigned(c: str):
@@ -2056,58 +2043,51 @@ class Table:
     # ------------------------------------------------------------------ #
     # scan path (/root/reference/src/table/scan.rs:43-89)                #
     # ------------------------------------------------------------------ #
-    def _read_schema(self):
-        """Explicit read schema (nullable, + dt partition column) for
-        evolved tables: files written BEFORE a column was added lack it,
-        and footer-derived inference would either miss the column or
-        make the scan depend on which file Spark sampled."""
+    def _read(self, files: list[str] | None = None) -> DataFrame:
+        """The one snapshot reader: manifest-relative ``files`` under
+        ``basePath`` (hive discovery keeps ``dt``, and with it directory
+        pruning, over an explicit list), or the whole data directory
+        when None (listing mode), with added-column defaults filled in.
+
+        The reader gets an explicit schema, the sidecar's data columns
+        nullable as every parquet read reports them: that spares Spark
+        the footer-inference job and most of the plan build, and ``dt``
+        is still discovered from the directory names (a DATE for day
+        partitions).  Evolved tables pin ``dt`` as a STRING, as they
+        always have.  There the schema is needed for correctness too:
+        files written BEFORE a column was added lack it, footer
+        inference would miss it or depend on which file Spark sampled,
+        and a dropped column stays projected away."""
         from pyspark.sql import types as T
 
-        fields = [T.StructField(c.name,
-                                c.spark_type(self.schema.strict_u64), True)
-                  for c in self.schema.columns]
-        if self.schema.partition_by.date_format is not None:
-            fields.append(T.StructField("dt", T.StringType(), True))
-        return T.StructType(fields)
-
-    def _apply_added_defaults(self, df: DataFrame) -> DataFrame:
-        for name, default in self._meta.added_defaults.items():
-            if default is not None:
-                df = df.withColumn(name, F.coalesce(
-                    F.col(name),
-                    F.lit(default).cast(df.schema[name].dataType)))
-        return df
-
-    def df(self) -> DataFrame:
-        # NB: the manifest branch below is intentionally DUPLICATED in
-        # _df_pruned — keep the two in sync (evolved-schema reader,
-        # empty-frame schema, basePath read, added-defaults).  A shared
-        # helper would be cleaner, but editing this function's body
-        # trips tools/changed_gates.py's name-reference closure on the
-        # ubiquitous local name `df` and floods rule-1 with ~140
-        # false-positive gates (r18 review finding, accepted tradeoff).
         p = os.path.join(self.path, "parquet")
-        evolved = bool(self._meta.added_defaults
-                       or self._meta.dropped_columns)
-        reader = self.spark.read
-        if evolved:
-            reader = reader.schema(self._read_schema())
-        if self._meta.manifest:
-            # Snapshot read: only files the manifest committed are
-            # visible.  basePath keeps hive-partition (dt) discovery —
-            # and with it directory pruning — over the explicit list.
-            _, files = self._latest_manifest()
-            if not files:
-                return self.spark.createDataFrame(
-                    [], self.schema.spark_schema().add("dt", "string"))
+        if files == [] or files is None and not os.path.exists(p):
+            return self.spark.createDataFrame(
+                [], self.schema.spark_schema().add("dt", "string"))
+        schema = T.StructType([
+            T.StructField(c.name, c.spark_type(self.schema.strict_u64))
+            for c in self.schema.columns])
+        if ((self._meta.added_defaults or self._meta.dropped_columns)
+                and self.schema.partition_by.date_format is not None):
+            schema = schema.add("dt", T.StringType())
+        reader = self.spark.read.schema(schema)
+        if files is None:
+            out = reader.parquet(p)
+        else:
             out = (reader.option("basePath", p)
                    .parquet(*[os.path.join(p, f) for f in files]))
-            return self._apply_added_defaults(out) if evolved else out
-        if not os.path.exists(p):
-            return self.spark.createDataFrame([], self.schema.spark_schema()
-                                              .add("dt", "string"))
-        out = reader.parquet(p)
-        return self._apply_added_defaults(out) if evolved else out
+        for name, default in self._meta.added_defaults.items():
+            if default is not None:
+                out = out.withColumn(name, F.coalesce(
+                    F.col(name),
+                    F.lit(default).cast(out.schema[name].dataType)))
+        return out
+
+    def df(self) -> DataFrame:
+        # manifest tables read only the files the manifest committed
+        if self._meta.manifest:
+            return self._read(self._latest_manifest()[1])
+        return self._read()
 
     def _df_pruned(self, ts_bounds: tuple | None) -> DataFrame:
         """Snapshot DataFrame with manifest-level data skipping (r18):
@@ -2117,30 +2097,14 @@ class Table:
         for a file outside the range.  Falls back to the plain
         snapshot read when there is nothing to prune with; the caller
         must still apply the row-level predicate (stats pruning is
-        file-granular).
-
-        The read body mirrors ``df()``'s manifest branch VERBATIM
-        except for the pruned file list — keep them in sync (see the
-        comment in ``df()`` for why they are not one helper)."""
+        file-granular)."""
         lo, hi = ts_bounds if ts_bounds is not None else (None, None)
         if not self._meta.manifest or (lo is None and hi is None):
             return self.df()
-        p = os.path.join(self.path, "parquet")
-        evolved = bool(self._meta.added_defaults
-                       or self._meta.dropped_columns)
-        reader = self.spark.read
-        if evolved:
-            reader = reader.schema(self._read_schema())
         _, head = self._latest_head()
-        files = self._prune_files_by_stats(
+        return self._read(self._prune_files_by_stats(
             self._files_of_head(head), self._stats_of_head(head),
-            {self.schema.ts_col: (lo, hi)})
-        if not files:
-            return self.spark.createDataFrame(
-                [], self.schema.spark_schema().add("dt", "string"))
-        out = (reader.option("basePath", p)
-               .parquet(*[os.path.join(p, f) for f in files]))
-        return self._apply_added_defaults(out) if evolved else out
+            {self.schema.ts_col: (lo, hi)}))
 
     def add_column(self, name: str, col_type: ColumnType,
                    default=None) -> None:
@@ -2415,49 +2379,29 @@ class Table:
         # as base_files for the flip.  (Reading the manifest a second
         # time via self.df() would race: an append committed between the
         # two reads gets compacted into the rewrite AND preserved as a
-        # survivor at the flip — duplicated rows.)
-        # Evolved tables MUST compact through the explicit read schema +
-        # materialized defaults: footer inference samples ONE file, and a
-        # pre-evolution file would make the rewrite silently drop an
-        # added column's data from every output file.  Reading through
-        # _read_schema() also projects dropped columns away, so compact
-        # really reclaims their bytes as drop_column() promises.
-        evolved = bool(self._meta.added_defaults
-                       or self._meta.dropped_columns)
-        reader = self.spark.read
-        if evolved:
-            reader = reader.schema(self._read_schema())
-        base_files: list[str] = []
+        # survivor at the flip — duplicated rows.)  Listing mode reads
+        # an EXPLICIT file snapshot too (not a directory scan at job
+        # time): the swap below preserves any file appended after this
+        # listing, so a concurrent write() is never lost.  Reading
+        # through the sidecar schema materializes added-column defaults
+        # and projects dropped columns away, so compact really reclaims
+        # their bytes as drop_column() promises.
         if self._meta.manifest:
             with self._meta_lock():
                 _, base_files = self._latest_manifest()
-            if base_files:
-                df = (reader.option("basePath", src)
-                      .parquet(*[os.path.join(src, f) for f in base_files]))
-            else:
-                df = self.spark.createDataFrame(
-                    [], self.schema.spark_schema().add("dt", "string"))
-            # size from the snapshot's files — a directory walk would
-            # count superseded/orphan files and over-split the output
-            total_bytes = sum(
-                os.path.getsize(os.path.join(src, f)) for f in base_files
-                if os.path.exists(os.path.join(src, f)))
         else:
-            # read from an EXPLICIT file snapshot (not a directory scan
-            # at job time): the swap below preserves any file appended
-            # after this listing, so a concurrent write() is never lost
             base_files = [
                 os.path.relpath(os.path.join(root, f), src)
                 for root, _, files in os.walk(src) for f in files
                 if not f.startswith(("_", "."))]
             if not base_files:
                 return 0
-            df = (reader.option("basePath", src)
-                  .parquet(*[os.path.join(src, f) for f in base_files]))
-            total_bytes = sum(
-                os.path.getsize(os.path.join(src, f)) for f in base_files)
-        if evolved:
-            df = self._apply_added_defaults(df)
+        df = self._read(base_files)
+        # size from the snapshot's files — a directory walk would count
+        # superseded/orphan files and over-split the output
+        total_bytes = sum(
+            os.path.getsize(os.path.join(src, f)) for f in base_files
+            if os.path.exists(os.path.join(src, f)))
         ts = self.schema.ts_col
         n_files = max(1, total_bytes // (target_file_mb * 1024 * 1024))
         n_parts = df.select("dt").distinct().count()
@@ -2557,9 +2501,12 @@ class Table:
         col = self.schema.column(column)
         if not col.is_symbol:
             raise ValueError(f"column {column!r} is not a symbol column")
-        rows = (self.df().select(column).distinct()
-                .orderBy(column).collect())
-        return [r[0] for r in rows]
+        # sorted on the driver (the distinct set is small), nulls first
+        # as an ascending orderBy puts them: a Spark sort would pay a
+        # range-sampling job and a second shuffle for a few KB of names
+        rows = self.df().select(column).distinct().collect()
+        return sorted((r[0] for r in rows),
+                      key=lambda s: (s is not None, s or ""))
 
     def symbol_codes(self, column: str) -> dict[int, str | None]:
         """The reference's symbol-code CONTRACT, surfaced explicitly:
