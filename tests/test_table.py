@@ -26,6 +26,11 @@ def make_schema(name="t1"):
             .with_partition_by(PartitionBy.DAY))
 
 
+def staging_debris(t):
+    stg = os.path.join(t.path, "_staging")
+    return os.listdir(stg) if os.path.exists(stg) else []
+
+
 def rows_df(spark, ts_list, sym="AAPL", price=1.0, size=10):
     return spark.createDataFrame(
         [Row(ts=t, sym=sym, price=price + i, size=size)
@@ -79,6 +84,92 @@ class TestWrite:
         with pytest.raises(ValueError, match="missing columns"):
             t.write(bad)
 
+    @pytest.mark.parametrize("cluster_by", [None, ["sym"]])
+    def test_each_file_sorted_by_sort_key(self, spark, tmp_home,
+                                          cluster_by):
+        import pyarrow.parquet as pq
+
+        t = Table.create(spark, make_schema(), home=tmp_home)
+        rows = [Row(ts=T0 + (i * 7919 % 600) * NS + (i % 3) * DAY,
+                    sym="ABC"[i % 3], price=float(i), size=i)
+                for i in range(600)]
+        t.write(spark.createDataFrame(rows).repartition(4),
+                cluster_by=cluster_by)
+        key = [*(cluster_by or []), "ts"]
+        for f in t.df().inputFiles():
+            got = pq.read_table(f.replace("file://", ""),
+                                columns=key).to_pylist()
+            want = [tuple(r[k] for k in key) for r in got]
+            assert want == sorted(want), f
+        assert t.scan().count() == 600
+
+    def test_range_path_files_disjoint_and_count_exact(
+            self, spark, tmp_home, monkeypatch):
+        # above the one-task cut-off the batch is range-partitioned; the
+        # stats are observed above the exchange, whose boundary sample
+        # re-runs the plan below it, so the count must stay exact
+        monkeypatch.setattr(Table, "_ONE_TASK_BYTES", 0)
+        t = Table.create(spark, make_schema(), home=tmp_home,
+                         manifest=True)
+        src = spark.range(3000).select(
+            (F.lit(T0) + (F.col("id") * 977 % 3000) * 60 * NS)
+            .alias("ts"), F.lit("A").alias("sym"),
+            F.col("id").cast("double").alias("price"),
+            F.col("id").alias("size"))
+        key = "spark.sql.adaptive.coalescePartitions.enabled"
+        prev = spark.conf.get(key)
+        spark.conf.set(key, "false")     # keep the range partitions apart
+        try:
+            assert t.write(src.repartition(3)) == 3000
+        finally:
+            spark.conf.set(key, prev)
+        assert t.row_count == 3000 and t.scan().count() == 3000
+        _, head = t._latest_head()
+        spans: dict = {}
+        for rel, (_rows, lo, hi) in t._stats_of_head(head).items():
+            spans.setdefault(rel.split("/")[0], []).append(
+                (lo["ts"], hi["ts"]))
+        assert len(spans) == 3                    # 3000 minutes: 3 days
+        assert sum(len(v) for v in spans.values()) > 3
+        for v in spans.values():
+            v.sort()
+            assert all(a[1] < b[0] for a, b in zip(v, v[1:])), v
+
+    @pytest.mark.parametrize("one_task_bytes", [None, 0])
+    def test_empty_batch_returns_zero(self, spark, tmp_home, monkeypatch,
+                                      one_task_bytes):
+        if one_task_bytes is not None:
+            monkeypatch.setattr(Table, "_ONE_TASK_BYTES", one_task_bytes)
+        t = Table.create(spark, make_schema(), home=tmp_home,
+                         manifest=True)
+        v0 = t._latest_manifest()[0]
+        assert t.write(rows_df(spark, [T0]).where("price < 0")) == 0
+        assert t.row_count == 0 and t._latest_manifest()[0] == v0
+
+    def test_failed_write_job_raises_without_blocking(self, spark,
+                                                      tmp_home):
+        import threading
+
+        t = Table.create(spark, make_schema(), home=tmp_home,
+                         manifest=True)
+        bad = rows_df(spark, [T0, T0 + 1]).withColumn(
+            "price", F.raise_error(F.lit("boom")).cast("double"))
+        errs = []
+
+        def run():
+            try:
+                t.write(bad)
+            except Exception as e:
+                errs.append(e)
+
+        th = threading.Thread(target=run, daemon=True)
+        th.start()
+        th.join(120)
+        assert not th.is_alive(), "write blocked after its job failed"
+        assert errs and "boom" in str(errs[0])
+        assert t.row_count == 0
+        assert staging_debris(t) == []
+
 
 class TestConcurrentAppend:
     def test_two_handles_compose(self, spark, tmp_home):
@@ -125,6 +216,48 @@ class TestManifest:
     def make(self, spark, tmp_home):
         return Table.create(spark, make_schema("tman"), home=tmp_home,
                             manifest=True)
+
+    @pytest.mark.parametrize("bad", ["null_ts", "check", "out_of_order"])
+    def test_refused_batch_leaves_no_trace(self, spark, tmp_home, bad):
+        t = self.make(spark, tmp_home)
+        t.write(rows_df(spark, [T0 + DAY, T0 + DAY + 1]))
+        t.add_check("price_pos", "price > 0")
+        data = os.path.join(t.path, "parquet")
+
+        def on_disk():
+            return sorted(os.path.join(d, f)
+                          for d, _, fs in os.walk(data) for f in fs)
+
+        before = (t._latest_manifest()[0], t.row_count, on_disk())
+        batch, err, match = {
+            "null_ts": (spark.createDataFrame(
+                [(None, "A", 1.0, 1)],
+                "ts long, sym string, price double, size long"),
+                ValueError, "NULL ts"),
+            "check": (rows_df(spark, [T0 + 2 * DAY], price=-5.0),
+                      ValueError, "price_pos"),
+            "out_of_order": (rows_df(spark, [T0]), OutOfOrderError,
+                             "out of order"),
+        }[bad]
+        with pytest.raises(err, match=match):
+            t.write(batch)
+        t2 = Table.open(spark, "tman", home=tmp_home)
+        assert (t2._latest_manifest()[0], t2.row_count,
+                on_disk()) == before
+        assert staging_debris(t) == []
+
+    @pytest.mark.parametrize("evolved", [False, True])
+    def test_snapshot_latest_equals_df(self, spark, tmp_home, evolved):
+        t = self.make(spark, tmp_home)
+        t.write(rows_df(spark, [T0, T0 + DAY]))
+        if evolved:
+            t.add_column("venue", ColumnType.SYMBOL8, default="UNK")
+            t.drop_column("size")
+            t.write(spark.createDataFrame(
+                [Row(ts=T0 + 2 * DAY, sym="B", price=3.0, venue="X")]))
+        snap, cur = t.snapshot(t._latest_manifest()[0]), t.df()
+        assert snap.schema == cur.schema
+        assert sorted(snap.collect()) == sorted(cur.collect())
 
     def test_threaded_manifest_appends_compose(self, spark, tmp_home):
         import threading

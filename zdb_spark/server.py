@@ -27,9 +27,9 @@ Differences, by design:
   (table missing / column missing / must-define-scan).
 
 The handler is intentionally framework-free (http.server) — the container
-has no Flask; concurrency comes from ThreadingHTTPServer + Spark's FAIR
-scheduler, replacing the reference's fork-per-connection workers
-(/root/reference/src/main.rs:16-49).
+has no Flask; ThreadingHTTPServer threads replace the reference's
+fork-per-connection workers (/root/reference/src/main.rs:16-49) and submit
+to one session whose scheduler runs FIFO (no ``spark.scheduler.mode``).
 """
 
 from __future__ import annotations

@@ -34,10 +34,11 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import uuid
 from contextlib import contextmanager
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from .schema import ColumnType, PartitionBy, Schema
@@ -282,13 +283,22 @@ class Table:
             return df.withColumn("dt", F.lit("all"))
         return df.withColumn("dt", F.date_format(ts_utc, fmt))
 
+    # Catalyst size estimate under which ONE sorted task writes an append:
+    # on a 4-vCPU host the range path kept one file per dt for a 40k-tick
+    # day (estimate 3.04 MB) and split a 45k one (3.42 MB), at AQE's 1 MB
+    # minimum partition size, which does not depend on the core count.
+    _ONE_TASK_BYTES = 3 * 1024 * 1024
+
     def write(self, df: DataFrame, enforce_order: bool = True,
               cluster_by: list[str] | None = None,
               max_records_per_file: int | None = None,
               txn: tuple[str, int] | None = None) -> int:
-        """Append a batch. Validates schema, enforces the monotonic-append
-        invariant against recorded max_ts, derives ``dt``, sorts by ts
-        within files, appends Parquet, updates the sidecar.
+        """Append a batch in one pass: validates schema, derives ``dt``,
+        stages Parquet sorted by ts within files while observing the
+        batch stats, then refuses null-ts, CHECK-violating or
+        out-of-order batches before any file becomes visible, and
+        commits.  Under ``_ONE_TASK_BYTES`` one sorted task writes the
+        batch (one Spark job); above it a range shuffle fans it out.
 
         ``cluster_by`` prepends secondary sort columns (e.g. ``["sym"]``)
         ahead of ``ts`` inside each file: Parquet column stats then skip
@@ -341,17 +351,115 @@ class Table:
                     c.name,
                     F.col(c.name) - F.col(c.name) % F.lit(c.resolution))
 
-        # Persist across the three consumers of this plan (stats agg,
-        # range-boundary sampling, the write): without it every append —
-        # including every streaming micro-batch — recomputes the source
-        # plan three times, and a non-deterministic upstream could make
-        # stats and data diverge.
-        df = df.persist()
+        # Batch stats and CHECK violation counts ride on the write job.
+        checks = list((self._meta.checks or {}).items())
+        obs = Observation()
+        stats = [
+            F.count(F.lit(1)).alias("n"),
+            F.count(ts).alias("n_ts"),
+            F.min(ts).alias("lo"),
+            F.max(ts).alias("hi"),
+            *[F.coalesce(
+                  F.sum((~F.coalesce(F.expr(sql), F.lit(True)))
+                        .cast("long")), F.lit(0)).alias(f"_ck_{i}")
+              for i, (_nm, sql) in enumerate(checks)],
+        ]
+        small = (df._jdf.queryExecution().optimizedPlan().stats()
+                 .sizeInBytes() < self._ONE_TASK_BYTES)
+        out = self._with_partition_col(df)
+        # Sort by ts within each output file so Parquet row-group min/max
+        # stats stay selective (zdb's binary-search analogue, SURVEY.md §4).
+        # ``dt`` leads the sort: FileFormatWriter requires ordering by the
+        # partition columns and inserts its OWN (order-destroying) sort if
+        # the incoming order doesn't already start with them.
+        out, sort_cols, zkeyed = self._clustering(out, cluster_by, ts)
+        if small:
+            # one file per dt, as the range path gives such a batch, but
+            # without its boundary-sampling job and shuffle
+            clustered = out.observe(obs, *stats).coalesce(1)
+        else:
+            # repartitionByRange, NOT repartition("dt"): hash-partitioning
+            # on dt alone funnels every row of a day into ONE task writing
+            # ONE file — a single-task bottleneck (and an unsplittable
+            # giant file) for any hot day at scale.  Range partitioning on
+            # the full sort key lets a hot day fan out across tasks while
+            # keeping each task's slice contiguous in (dt, cluster, ts), so
+            # files stay disjoint in the sort key and row-group stats stay
+            # selective.  The observe sits ABOVE the exchange: the range
+            # boundary sample re-runs everything below it, so metrics
+            # observed there would count every row twice.
+            clustered = out.repartitionByRange(*sort_cols).observe(obs, *stats)
+        clustered = clustered.sortWithinPartitions(*sort_cols)
+        if zkeyed:
+            # the curve key is LAYOUT only — dropping it after the sort
+            # keeps the intra-partition order (projection is order-safe)
+            clustered = clustered.drop("_zkey")
+        writer = clustered.write.mode("overwrite")
+        if max_records_per_file is not None:
+            writer = writer.option("maxRecordsPerFile", max_records_per_file)
+        if self._meta.compression:
+            writer = writer.option("compression", self._meta.compression)
+        # Stage in a per-batch directory, then rename part files into
+        # place.  Two jobs appending directly to the same path share ONE
+        # `_temporary` staging dir and each job's commit deletes the
+        # other's in-flight task files (observed: FileNotFoundException at
+        # commitJob under 4 concurrent appends).  Unique staging + rename
+        # (part filenames already carry job UUIDs) makes concurrent
+        # appends compose; batch-level atomic VISIBILITY would need a
+        # manifest log on top (readers may glimpse a partially-moved
+        # batch after a mid-move crash).
+        staging = os.path.join(self.path, "_staging", uuid.uuid4().hex)
+        dest_root = os.path.join(self.path, "parquet")
         try:
-            return self._write_persisted(df, ts, enforce_order, cluster_by,
-                                         max_records_per_file, txn)
+            writer.partitionBy("dt").parquet(staging)
+            # Read the observation only after the write returned (get
+            # blocks forever if the job never ran) and never for an empty
+            # batch, which stages no dt dir and may leave it unfilled.
+            if not any(d.startswith("dt=") for d in os.listdir(staging)):
+                return 0
+            m = obs.get
+            n, lo, hi = m["n"], m["lo"], m["hi"]
+            if m["n_ts"] != n:
+                # A failed cast yields NULL silently; null-ts rows would
+                # land in the Hive default partition, invisible to every
+                # pruned time-range scan (and `lo` would be None,
+                # breaking the order check).  Refuse loudly instead.
+                raise ValueError(
+                    f"batch has {n - m['n_ts']} NULL {ts} values after "
+                    f"schema cast (unparseable input?); null-ts rows would "
+                    "be unreachable by time-range scans")
+            for i, (nm, sql) in enumerate(checks):
+                bad = int(m[f"_ck_{i}"])
+                if bad:
+                    raise ValueError(
+                        f"CHECK constraint {nm!r} ({sql}) violated by "
+                        f"{bad} of {n} batch rows — nothing was written")
+            cur_max = self.get_last_ts()
+            if enforce_order and cur_max is not None and lo < cur_max:
+                raise OutOfOrderError(
+                    f"Timestamp {lo} is out of order (table max_ts "
+                    f"{cur_max})")
+            if self._meta.manifest:
+                # LOCK-FREE commit: part filenames are unique, so moves
+                # need no coordination; visibility + stats + txn marks
+                # all flip in ONE optimistic CAS manifest publish.
+                return self._commit_append_cas(staging, dest_root,
+                                               n, lo, hi, txn)
+            # Listing mode: take the table lock BEFORE moving files into
+            # the data tree — a lock timeout then aborts with the batch
+            # still in _staging (invisible, cleaned below) instead of
+            # leaving visible rows with a stale sidecar.  The moves are
+            # renames (microseconds), so holding the lock across them
+            # costs concurrent appends nothing.
+            moved: list[str] = []
+            with self._meta_lock():
+                if txn is not None and self._last_txn(txn[0]) >= txn[1]:
+                    return 0  # lost the race to a concurrent replay
+                self._move_staged(staging, dest_root, moved)
+                self._merge_meta_locked(n, lo, hi, txn=txn)
         finally:
-            df.unpersist()
+            shutil.rmtree(staging, ignore_errors=True)
+        return n
 
     def _clustering(self, out: DataFrame, cluster_by: list[str] | None,
                     ts: str) -> tuple[DataFrame, list[str], bool]:
@@ -376,110 +484,6 @@ class Table:
                 for c in z["cols"]]
         out = out.withColumn("_zkey", zorder_key(grid, int(z["bits"])))
         return out, ["dt", "_zkey", ts], True
-
-    def _write_persisted(self, df: DataFrame, ts: str, enforce_order,
-                         cluster_by, max_records_per_file, txn) -> int:
-        # CHECK violation counts fold into the one stats pass the
-        # append already pays (df is persisted) — the refusal fires
-        # BEFORE any file lands, with a per-check count.
-        checks = list((self._meta.checks or {}).items())
-        stats = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count(ts).alias("n_ts"),
-            F.min(ts).alias("lo"),
-            F.max(ts).alias("hi"),
-            *[F.coalesce(
-                  F.sum((~F.coalesce(F.expr(sql), F.lit(True)))
-                        .cast("long")), F.lit(0)).alias(f"_ck_{i}")
-              for i, (_nm, sql) in enumerate(checks)],
-        ).collect()[0]
-        n, lo, hi = stats["n"], stats["lo"], stats["hi"]
-        if n == 0:
-            return 0
-        if stats["n_ts"] != n:
-            # A failed cast yields NULL silently; null-ts rows would land
-            # in the Hive default partition, invisible to every pruned
-            # time-range scan (and `lo` would be None, breaking the
-            # order check).  Refuse loudly instead.
-            raise ValueError(
-                f"batch has {n - stats['n_ts']} NULL {ts} values after "
-                f"schema cast (unparseable input?); null-ts rows would "
-                "be unreachable by time-range scans")
-        for i, (nm, sql) in enumerate(checks):
-            bad = int(stats[f"_ck_{i}"])
-            if bad:
-                raise ValueError(
-                    f"CHECK constraint {nm!r} ({sql}) violated by "
-                    f"{bad} of {n} batch rows — nothing was written")
-        cur_max = self.get_last_ts()
-        if enforce_order and cur_max is not None and lo < cur_max:
-            raise OutOfOrderError(
-                f"Timestamp {lo} is out of order (table max_ts "
-                f"{cur_max})")
-
-        out = self._with_partition_col(df)
-        # Sort by ts within each output file so Parquet row-group min/max
-        # stats stay selective (zdb's binary-search analogue, SURVEY.md §4).
-        # ``dt`` leads the sort: FileFormatWriter requires ordering by the
-        # partition columns and inserts its OWN (order-destroying) sort if
-        # the incoming order doesn't already start with them.
-        out, sort_cols, zkeyed = self._clustering(out, cluster_by, ts)
-        # repartitionByRange, NOT repartition("dt"): hash-partitioning on
-        # dt alone funnels every row of a day into ONE task writing ONE
-        # file — a single-task bottleneck (and an unsplittable giant file)
-        # for any hot day at scale.  Range partitioning on the full sort
-        # key lets a hot day fan out across tasks while keeping each
-        # task's slice contiguous in (dt, cluster, ts), so files stay
-        # disjoint in the sort key and row-group stats stay selective.
-        # No explicit N: AQE coalesces the range shuffle for small
-        # batches, so tiny appends still produce few files.
-        clustered = (out.repartitionByRange(*sort_cols)
-                     .sortWithinPartitions(*sort_cols))
-        if zkeyed:
-            # the curve key is LAYOUT only — dropping it after the sort
-            # keeps the intra-partition order (projection is order-safe)
-            clustered = clustered.drop("_zkey")
-        writer = clustered.write.mode("overwrite")
-        if max_records_per_file is not None:
-            writer = writer.option("maxRecordsPerFile", max_records_per_file)
-        if self._meta.compression:
-            writer = writer.option("compression", self._meta.compression)
-        # Stage in a per-batch directory, then rename part files into
-        # place.  Two jobs appending directly to the same path share ONE
-        # `_temporary` staging dir and each job's commit deletes the
-        # other's in-flight task files (observed: FileNotFoundException at
-        # commitJob under 4 concurrent appends).  Unique staging + rename
-        # (part filenames already carry job UUIDs) makes concurrent
-        # appends compose; batch-level atomic VISIBILITY would need a
-        # manifest log on top (readers may glimpse a partially-moved
-        # batch after a mid-move crash).
-        import uuid
-
-        staging = os.path.join(self.path, "_staging", uuid.uuid4().hex)
-        writer.partitionBy("dt").parquet(staging)
-        dest_root = os.path.join(self.path, "parquet")
-        try:
-            if self._meta.manifest:
-                # LOCK-FREE commit: part filenames are unique, so moves
-                # need no coordination; visibility + stats + txn marks
-                # all flip in ONE optimistic CAS manifest publish.
-                return self._commit_append_cas(staging, dest_root,
-                                               n, lo, hi, txn)
-            # Listing mode: take the table lock BEFORE moving files into
-            # the data tree — a lock timeout then aborts with the batch
-            # still in _staging (invisible, cleaned below) instead of
-            # leaving visible rows with a stale sidecar.  The moves are
-            # renames (microseconds), so holding the lock across them
-            # costs concurrent appends nothing.
-            moved: list[str] = []
-            with self._meta_lock():
-                if txn is not None and self._last_txn(txn[0]) >= txn[1]:
-                    return 0  # lost the race to a concurrent replay
-                self._move_staged(staging, dest_root, moved)
-                self._merge_meta_locked(n, lo, hi, txn=txn)
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
-        return n
 
     @staticmethod
     def _move_staged(staging: str, dest_root: str,
@@ -958,17 +962,13 @@ class Table:
 
     def snapshot(self, version: int) -> DataFrame:
         """Time-travel read: the table exactly as of manifest ``version``
-        (manifest-mode tables only).  Compaction rewrites files, so
-        pre-compaction snapshots are readable only until ``vacuum()``."""
+        (manifest-mode tables only), read through ``_read`` in the
+        current schema, as ``df()`` reads the latest one.  Compaction
+        rewrites files, so pre-compaction snapshots are readable only
+        until ``vacuum()``."""
         if not self._meta.manifest:
             raise ValueError("snapshot() requires a manifest=True table")
-        files = self._version_files(version)
-        p = os.path.join(self.path, "parquet")
-        if not files:
-            return self.spark.createDataFrame(
-                [], self.schema.spark_schema().add("dt", "string"))
-        return (self.spark.read.option("basePath", p)
-                .parquet(*[os.path.join(p, f) for f in files]))
+        return self._read(self._version_files(version))
 
     def changes_between(self, from_version: int,
                         to_version: int | None = None) -> DataFrame:
