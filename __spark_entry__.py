@@ -1045,24 +1045,25 @@ def q_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E2E stream→table→query parity (the Structured-Streaming ingest
     north star): an ``availableNow`` file stream over the events parquet
-    runs through ``stream_writer`` into a real Table's storage (derived
-    ``dt`` partitions + checkpointed exactly-once file sink — the
-    streaming analogue of the reference's ordered-append contract,
+    runs through ``stream_writer_table`` into a Table (derived ``dt``
+    partitions, one manifest commit per micro-batch with its batch id —
+    the streaming analogue of the reference's ordered-append contract,
     /root/reference/src/table/write.rs:62-121), then ``Table.scan`` with
     a time range reads it BACK through the partition-pruned batch path
     and aggregates.  The oracle aggregates the original events directly —
     a hash match proves the stream path loses/duplicates/mangles nothing.
 
     Idempotent across calls: the checkpoint makes re-running a no-op and
-    the read-back honors the sink's transaction log.
+    the manifest's batch-id marks make any replayed batch one too.
     """
     import tempfile
 
     from zdb_spark.schema import ColumnType, PartitionBy, Schema
-    from zdb_spark.streaming.ingest import stream_writer
+    from zdb_spark.streaming.ingest import stream_writer_table
     from zdb_spark.table import Table
 
-    key = _stream_key(sf_dir, "ingest-v1")
+    # v2: the v1 home holds a raw file-sink checkpoint
+    key = _stream_key(sf_dir, "ingest-v2")
     home = os.path.join(tempfile.gettempdir(), "zdb_stream_ingest", key)
     schema = (Schema("events_stream")
               .add_col("event_id", ColumnType.I64)
@@ -1074,9 +1075,7 @@ def q_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = (_stream_events(spark, sf_dir)
            .select("ts", "event_id", "user_id", "event_type", "value"))
-    q = stream_writer(src, os.path.join(t.path, "parquet"),
-                      os.path.join(home, "ckpt"),
-                      partition_by=PartitionBy.DAY)
+    q = stream_writer_table(src, t, os.path.join(home, "ckpt"))
     q.awaitTermination()
 
     lo = 1704412800 * 10**9          # 2024-01-05T00:00:00Z
@@ -1693,8 +1692,9 @@ def q_table_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_convert_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Offline column type migration (S11, scripts/convert_col.jl:1-61)
     value-checked end-to-end: events land in a table with user_id as I64,
-    ``convert_column_type`` rewrites every partition to F64 (temp-dir +
-    swap, original intact on failure), then a fresh ``Table.open`` scans
+    ``convert_column_type`` rewrites every partition to F64 (new files
+    beside the old, one manifest flip, original intact on failure), then
+    a fresh ``Table.open`` scans
     the migrated tree.  ``migrated_type`` is read from the LIVE DataFrame
     schema — the oracle hard-codes 'double', so a hash match proves the
     cast really reached the parquet files, and the integer-valued sums
@@ -6122,6 +6122,16 @@ _CHANGED_THIS_ROUND = [
     # local proof; these two run the changed code directly.
     "server_ohlcv",
     "table_merge",
+    # One Table mode: these gates' tables were listing-mode tables and
+    # are now manifest tables (stream_ingest also moved from the raw
+    # file sink to stream_writer_table; convert_column publishes through
+    # the compact flip).  server_ohlcv is already queued above.
+    "stream_ingest",
+    "ingest_csv",
+    "ingest_orc",
+    "ingest_json",
+    "schema_evolution",
+    "convert_column",
 ]
 
 # Rule-1 pressure valve, used ONLY when the window is over-subscribed:
@@ -6287,12 +6297,6 @@ _CHANGED_BUT_LOCALLY_PROVEN = {
     "stream_txn_stress": ("txn-replay commit path unchanged except "
                           "stats ride-along; bit-exact mirror green "
                           "(r18)"),
-    "convert_column": ("offline migration rebuilds through the "
-                       "commit path (stats now recorded), values "
-                       "untouched; bit-exact mirror green (r18)"),
-    "stream_ingest": ("scan(lo, hi) now prunes files by recorded "
-                      "stats — sound skip only; bit-exact mirror "
-                      "green (r18)"),
     # Round 17: snapshot() refactor — the version-file loading moved
     # verbatim into _version_files so the new changes_between CDC
     # reader shares it; the read path is expression-identical and the
@@ -6392,8 +6396,7 @@ _CHANGED_BUT_LOCALLY_PROVEN.update(
         "embedding_pca", "events_timeline", "export_shards",
         "export_webdataset", "global_shuffle",
         "gopher_rules", "grouped_pandas", "hash_split", "hll_store",
-        "hll_vocab", "html_extract", "hybrid_search", "ingest_csv",
-        "ingest_json", "ingest_orc", "join_enrich",
+        "hll_vocab", "html_extract", "hybrid_search", "join_enrich",
         "kmv_distinct", "kmv_merge", "kmv_quantiles", "kmv_setops",
         "kmv_store", "knn_ivf",
         "knn_join", "knn_lsh", "knn_lsh_multiprobe",

@@ -10,10 +10,10 @@ Measures BOTH ingest routes and prints ONE JSON line:
 
 - ``batch_write``: rows/sec through ``Table.write`` (schema validation,
   ordered-append check, resolution rounding, dt derivation, range
-  repartition, sorted parquet append, sidecar update — the whole
+  repartition, sorted parquet append, manifest commit — the whole
   contract, not a bare parquet dump).
-- ``stream_sink``: rows/sec through the checkpointed Structured
-  Streaming file sink (``stream_writer``, availableNow), the
+- ``stream_sink``: rows/sec through checkpointed Structured Streaming
+  into a Table (``stream_writer_table``, availableNow), the
   exactly-once ingest route.
 
 Row count defaults to 2_000_000 (Spark's per-batch overhead is a fixed
@@ -46,7 +46,7 @@ def measure_write_throughput(spark, n_rows: int,
     from pyspark.sql import functions as F
 
     from zdb_spark.schema import ColumnType, PartitionBy, Schema
-    from zdb_spark.streaming.ingest import stream_writer
+    from zdb_spark.streaming.ingest import stream_writer_table
     from zdb_spark.table import Table
 
     home = tempfile.mkdtemp(prefix="zdb_bench_write_")
@@ -97,7 +97,7 @@ def measure_write_throughput(spark, n_rows: int,
             dt = time.time() - t0
             batch_secs = dt if batch_secs is None else min(batch_secs, dt)
 
-        # -- streaming route: checkpointed availableNow file sink ----- #
+        # -- streaming route: checkpointed availableNow into a Table -- #
         # (skipped in --batch-only mode: the environment canary needs a
         # fast fixed workload, and its pinned clean band is batch-route)
         if batch_only:
@@ -114,11 +114,12 @@ def measure_write_throughput(spark, n_rows: int,
         stream_secs = None
         for i in range(2):
             sink = os.path.join(home, f"stream_sink_{i}")
+            t = Table.create(spark, ohlcv_schema(f"agg1d_stream_{i}"),
+                             home=sink)
             t0 = time.time()
-            q = stream_writer(
-                spark.readStream.schema(ts_schema).parquet(stage),
-                os.path.join(sink, "parquet"), os.path.join(sink, "ckpt"),
-                partition_by=PartitionBy.DAY)
+            q = stream_writer_table(
+                spark.readStream.schema(ts_schema).parquet(stage), t,
+                os.path.join(sink, "ckpt"))
             q.awaitTermination()
             dt = time.time() - t0
             stream_secs = dt if stream_secs is None else min(stream_secs, dt)

@@ -2,6 +2,8 @@
 watermark, and the stateful sessionizer — run with availableNow triggers
 over file sources so they terminate deterministically."""
 
+import os
+
 import pytest
 
 from pyspark.sql import Row, functions as F
@@ -25,32 +27,7 @@ def _stream(spark, path):
     return spark.readStream.schema(schema).parquet(path)
 
 
-class TestStreamWriter:
-    def test_partitioned_sink(self, spark, tick_dir, tmp_path):
-        from zdb_spark.streaming.ingest import stream_writer
-
-        out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-        q = stream_writer(_stream(spark, tick_dir), out, ckpt)
-        q.awaitTermination(120)
-        got = spark.read.parquet(out)
-        assert got.count() == 60
-        assert "dt" in got.columns
-        # partition-column type inference may surface dt as DATE
-        assert str(got.select("dt").distinct().collect()[0]["dt"]) == "2024-01-01"
-
-    def test_exactly_once_on_restart(self, spark, tick_dir, tmp_path):
-        from zdb_spark.streaming.ingest import stream_writer
-
-        out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-        q = stream_writer(_stream(spark, tick_dir), out, ckpt)
-        q.awaitTermination(120)
-        # restarting over the same checkpoint must not duplicate rows
-        q2 = stream_writer(_stream(spark, tick_dir), out, ckpt)
-        q2.awaitTermination(120)
-        assert spark.read.parquet(out).count() == 60
-
-
-def _tick_table(spark, tmp_path, name="ticks", manifest=True):
+def _tick_table(spark, tmp_path, name="ticks"):
     from zdb_spark.schema import ColumnType, PartitionBy, Schema
     from zdb_spark.table import Table
 
@@ -59,8 +36,7 @@ def _tick_table(spark, tmp_path, name="ticks", manifest=True):
               .add_col("price", ColumnType.F64)
               .add_col("user_id", ColumnType.I64)
               .with_partition_by(PartitionBy.DAY))
-    return Table.create(spark, schema, home=str(tmp_path / "home"),
-                        manifest=manifest)
+    return Table.create(spark, schema, home=str(tmp_path / "home"))
 
 
 class TestStreamWriterTable:
@@ -148,6 +124,63 @@ class TestStreamWriterTable:
         assert t.df().count() == 200
         assert observed <= valid, f"partial batch seen: {observed - valid}"
         assert v >= 2  # genuinely multi-batch
+
+    def test_restart_at_shipped_retention(self, spark, tmp_path):
+        # Five runs on one checkpoint over a growing source, at the
+        # session's shipped minBatchesToRetain=2.  Two restarts follow a
+        # crash after the offset was logged but before its commit: Spark
+        # re-runs that batch id and the manifest txn turns it into a
+        # no-op, so every row lands exactly once.
+        from zdb_spark.streaming.ingest import stream_writer_table
+
+        assert spark.conf.get("spark.sql.streaming.minBatchesToRetain") == "2"
+        src, ckpt = str(tmp_path / "grow"), str(tmp_path / "rckpt")
+        t = _tick_table(spark, tmp_path)
+        schema = "ts long, sym string, price double, user_id long"
+        written, batch_ids = [], []
+        write = t.write
+
+        def counting_write(df, **kw):
+            batch_ids.append(kw["txn"][1])
+            return write(df, **kw)
+
+        t.write = counting_write
+
+        def add_file():
+            k = len(written)
+            rows = [(T0 + (k + i) * NS, "X", float(i), k)
+                    for i in range(10)]
+            spark.createDataFrame(rows, schema).coalesce(1) \
+                .write.mode("append").parquet(src)
+            written.extend(r[0] for r in rows)
+
+        def newest_commit():
+            return max(int(f) for f in os.listdir(os.path.join(ckpt, "commits"))
+                       if f.isdigit())
+
+        for run, (files, crash) in enumerate(
+                [(2, False), (1, False), (1, True), (1, False), (1, True)]):
+            for _ in range(files):
+                add_file()
+            if crash:
+                n = newest_commit()
+                for f in (str(n), f".{n}.crc"):
+                    if os.path.exists(os.path.join(ckpt, "commits", f)):
+                        os.unlink(os.path.join(ckpt, "commits", f))
+            stream = (spark.readStream.schema(schema)
+                      .option("maxFilesPerTrigger", 1).parquet(src))
+            q = stream_writer_table(stream, t, ckpt, app_id="grow")
+            q.awaitTermination(120)
+            assert q.exception() is None
+            got = [r.ts for r in t.df().select("ts").collect()]
+            assert sorted(got) == sorted(written), f"run {run}"
+            assert t.row_count == len(written)
+            assert t._last_txn("grow") == newest_commit()
+        # each crashed batch was delivered twice, committed once
+        assert batch_ids == [0, 1, 2, 2, 3, 4, 4, 5]
+        assert t._latest_head()[0] == 6
+        # the retention really purged: early batches' logs are gone
+        assert "0" not in os.listdir(os.path.join(ckpt, "offsets"))
 
 
 class TestStreamResample:

@@ -31,6 +31,26 @@ def staging_debris(t):
     return os.listdir(stg) if os.path.exists(stg) else []
 
 
+def to_listing_format(t):
+    """Turn table ``t`` into the sidecar format of a listing-mode table
+    from before every table was a manifest table: no ``_manifest``, row
+    stats and streaming txn marks in ``_meta``.  ``Table.open`` upgrades
+    it."""
+    import json
+    import shutil
+
+    _, head = t._latest_head()
+    shutil.rmtree(t._manifest_dir(), ignore_errors=True)
+    meta_path = os.path.join(t.path, "_meta")
+    with open(meta_path) as f:
+        meta = json.load(f)
+    meta.update(manifest=False, row_count=head["row_count"],
+                min_ts=head["min_ts"], max_ts=head["max_ts"],
+                txns=head["txns"])
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
+
+
 def rows_df(spark, ts_list, sym="AAPL", price=1.0, size=10):
     return spark.createDataFrame(
         [Row(ts=t, sym=sym, price=price + i, size=size)
@@ -56,6 +76,103 @@ class TestLifecycle:
     def test_create_or_open(self, spark, tmp_home):
         Table.create_or_open(spark, make_schema(), home=tmp_home)
         Table.create_or_open(spark, make_schema(), home=tmp_home)  # no raise
+
+    def test_listing_mode_refused(self, spark, tmp_home):
+        with pytest.raises(ValueError, match="listing-mode"):
+            Table.create(spark, make_schema(), home=tmp_home,
+                         manifest=False)
+        assert not os.path.exists(os.path.join(tmp_home, "data", "t1"))
+        t = Table.create(spark, make_schema(), home=tmp_home)
+        t.write(rows_df(spark, [T0]))
+        assert t.snapshot(1).count() == 1
+        assert t.vacuum() == 0
+
+
+class TestUpgrade:
+    """``Table.open`` publishes manifest v1 for a listing-mode table
+    once, from the files the listing read saw."""
+
+    def check_upgraded(self, spark, tmp_home, name, n, lo, hi, txns):
+        import json
+
+        t = Table.open(spark, name, home=tmp_home)
+        with open(os.path.join(t.path, "_meta")) as f:
+            meta = json.load(f)
+        assert not {"manifest", "row_count", "min_ts", "max_ts",
+                    "txns"} & set(meta)
+        v, head = t._latest_head()
+        assert v == 1 and head["txns"] == txns
+        assert (t.row_count, t.get_first_ts(), t.get_last_ts()) \
+            == (n, lo, hi)
+        assert t.df().count() == n
+        # every live file carries its footer stats
+        assert all(r.rows is not None for r in t.describe_files().collect())
+        t.write(rows_df(spark, [hi + 1]))
+        assert t.row_count == n + 1
+        assert t.snapshot(1).count() == n
+        assert t.snapshot(2).count() == n + 1
+        # a second open publishes nothing
+        assert Table.open(spark, name, home=tmp_home)._latest_head()[0] == 2
+
+    def test_listing_table_upgrades_once(self, spark, tmp_home):
+        t = Table.create(spark, make_schema("legacy"), home=tmp_home)
+        t.write(rows_df(spark, [T0, T0 + 1]), txn=("app", 4))
+        t.write(rows_df(spark, [T0 + DAY]))
+        to_listing_format(t)
+        self.check_upgraded(spark, tmp_home, "legacy", 3, T0, T0 + DAY,
+                            {"app": 4})
+
+    def test_crash_before_sidecar_rewrite_finishes_on_next_open(
+            self, spark, tmp_home):
+        import json
+
+        t = Table.create(spark, make_schema("half"), home=tmp_home)
+        t.write(rows_df(spark, [T0]))
+        to_listing_format(t)
+        meta_path = os.path.join(t.path, "_meta")
+        with open(meta_path) as f:
+            legacy = f.read()
+        Table.open(spark, "half", home=tmp_home)
+        with open(meta_path, "w") as f:  # v1 published, sidecar not
+            f.write(legacy)
+        t2 = Table.open(spark, "half", home=tmp_home)
+        with open(meta_path) as f:
+            assert "row_count" not in json.load(f)
+        assert t2._latest_head()[0] == 1 and t2.row_count == 1
+
+    def test_file_sink_table_upgrades(self, spark, tmp_home, tmp_path):
+        # Spark's own parquet file sink wrote into the table directory
+        # (the retired raw stream sink did exactly this): its
+        # _spark_metadata log, not the directory, names the live files
+        import json
+        import shutil
+
+        t = Table.create(spark, make_schema("sink"), home=tmp_home)
+        src = str(tmp_path / "src")
+        rows_df(spark, [T0 + i for i in range(4)] + [T0 + DAY]) \
+            .withColumn("dt", F.date_format(F.timestamp_seconds(
+                (F.col("ts") / NS).cast("long")), "yyyy-MM-dd")) \
+            .write.parquet(src)
+        q = (spark.readStream.schema(spark.read.parquet(src).schema)
+             .parquet(src).writeStream.format("parquet")
+             .option("path", os.path.join(t.path, "parquet"))
+             .option("checkpointLocation", str(tmp_path / "ckpt"))
+             .partitionBy("dt").trigger(availableNow=True).start())
+        q.awaitTermination(120)
+        # a file the sink never committed stays out of the table
+        day = os.path.join(t.path, "parquet", "dt=2024-01-02")
+        part = next(f for f in os.listdir(day) if f.endswith(".parquet"))
+        shutil.copy(os.path.join(day, part),
+                    os.path.join(day, "part-orphan.parquet"))
+        to_listing_format(t)
+        meta_path = os.path.join(t.path, "_meta")
+        with open(meta_path) as f:
+            meta = json.load(f)
+        # the file sink never touched the sidecar's stats
+        meta.update(row_count=5, min_ts=T0, max_ts=T0 + DAY)
+        with open(meta_path, "w") as f:
+            json.dump(meta, f)
+        self.check_upgraded(spark, tmp_home, "sink", 5, T0, T0 + DAY, {})
 
 
 class TestWrite:
@@ -533,7 +650,8 @@ class TestManifest:
         assert t.scan().count() == 1
 
     def test_stale_lock_is_stolen(self, spark, tmp_home):
-        # a crashed writer's leftover lock must not block appends forever
+        # a crashed writer's leftover lock must not block sidecar edits
+        # forever
         import os
 
         t = Table.create(spark, make_schema("stale"), home=tmp_home)
@@ -542,8 +660,8 @@ class TestManifest:
             f.write("99999 0")
         old = 1_000_000.0
         os.utime(lock, (old, old))  # epoch-ancient ⇒ stale
-        t.write(rows_df(spark, [T0]))  # steals the lock and proceeds
-        assert t.row_count == 1
+        t.add_column("venue", ColumnType.SYMBOL8)  # steals the lock
+        assert "venue" in Table.open(spark, "stale", home=tmp_home).df().columns
         assert not os.path.exists(lock)
 
     def test_fresh_lock_blocks_until_timeout(self, spark, tmp_home):
@@ -558,18 +676,11 @@ class TestManifest:
                 pass
         os.unlink(lock)
 
-    def test_manifest_required_for_snapshot_api(self, spark, tmp_home):
-        t = Table.create(spark, make_schema("plain"), home=tmp_home)
-        with pytest.raises(ValueError, match="manifest=True"):
-            t.snapshot(1)
-        with pytest.raises(ValueError, match="manifest=True"):
-            t.vacuum()
-
     def test_reopen_preserves_manifest_mode(self, spark, tmp_home):
         t = self.make(spark, tmp_home)
         t.write(rows_df(spark, [T0]))
         t2 = Table.open(spark, "tman", home=tmp_home)
-        assert t2._meta.manifest is True
+        assert t2._latest_manifest()[0] == 1
         assert t2.scan().count() == 1
 
 
@@ -654,13 +765,12 @@ class TestReadSchema:
     @staticmethod
     def footer_schema(spark, t):
         p = os.path.join(t.path, "parquet")
-        if not t._meta.manifest:
-            return spark.read.parquet(p).schema
         files = t._latest_manifest()[1]
         return (spark.read.option("basePath", p)
                 .parquet(*[os.path.join(p, f) for f in files]).schema)
 
-    @pytest.mark.parametrize("manifest,partition_by,strict_u64", [
+    # fresh=False: a listing-format table, upgraded by ``Table.open``
+    @pytest.mark.parametrize("fresh,partition_by,strict_u64", [
         (True, PartitionBy.DAY, False),
         (False, PartitionBy.DAY, False),
         (True, PartitionBy.DAY, True),
@@ -668,11 +778,13 @@ class TestReadSchema:
         (True, PartitionBy.NONE, False),
     ])
     def test_df_schema_equals_footer_inference(
-            self, spark, tmp_home, manifest, partition_by, strict_u64):
+            self, spark, tmp_home, fresh, partition_by, strict_u64):
         t = Table.create(spark, self.every_type_schema(
-            "rs", partition_by, strict_u64), home=tmp_home,
-            manifest=manifest)
+            "rs", partition_by, strict_u64), home=tmp_home)
         t.write(self.every_type_rows(spark, t, [T0, T0 + 1, T0 + DAY]))
+        if not fresh:
+            to_listing_format(t)
+            t = Table.open(spark, "rs", home=tmp_home)
         want = self.footer_schema(spark, t)
         assert t.df().schema == want
         assert t.scan(T0, T0 + DAY).schema == t.scan().schema
@@ -697,17 +809,19 @@ class TestReadSchema:
         assert list(sc.statusTracker().getJobIdsForGroup(
             "zdb-read-plan")) == []
 
-    @pytest.mark.parametrize("manifest", [True, False])
-    def test_evolved_schema_unchanged(self, spark, tmp_home, manifest):
+    @pytest.mark.parametrize("fresh", [True, False])
+    def test_evolved_schema_unchanged(self, spark, tmp_home, fresh):
         """Evolved tables read ``dt`` as a STRING and a defaulted added
         column as non-nullable — pinned as they were before reads took
         the sidecar schema for every table."""
         from pyspark.sql.types import (DoubleType, LongType, StringType,
                                        StructField, StructType)
 
-        t = Table.create(spark, make_schema(), home=tmp_home,
-                         manifest=manifest)
+        t = Table.create(spark, make_schema(), home=tmp_home)
         t.write(rows_df(spark, [T0, T0 + DAY]))
+        if not fresh:
+            to_listing_format(t)
+            t = Table.open(spark, "t1", home=tmp_home)
         t.add_column("venue", ColumnType.SYMBOL8, default="UNK")
         t.add_column("fee", ColumnType.F64)
         t.drop_column("size")
@@ -734,6 +848,7 @@ class TestCompaction:
                                             "*.parquet"))
         assert len(part_files) >= 5
         assert t.compact() == 1
+        t.vacuum(grace_seconds=0)
         part_files = glob.glob(os.path.join(t.path, "parquet", "dt=*",
                                             "*.parquet"))
         assert len(part_files) == 1
@@ -757,6 +872,7 @@ class TestCompaction:
              for i in range(80_000)])
         t.write(df)
         t.compact(target_file_mb=1)  # tiny target → must split
+        t.vacuum(grace_seconds=0)
         hot = glob.glob(os.path.join(
             t.path, "parquet", "dt=2024-01-01", "*.parquet"))
         assert len(hot) >= 2
@@ -1180,6 +1296,7 @@ class TestDropColumn:
                t.scan().select("ts", "venue").collect()}
         assert got == {T0: "UNK", T0 + 1: "NYSE"}
         # and the default is now MATERIALIZED in the physical files
+        t.vacuum(grace_seconds=0)
         import glob
         files = glob.glob(f"{t.path}/parquet/dt=*/*.parquet")
         raw = spark.read.parquet(*files)
@@ -1188,8 +1305,9 @@ class TestDropColumn:
             == {"UNK", "NYSE"}
 
     def test_compact_reclaims_dropped_column_bytes(self, spark, tmp_home):
-        """After drop_column + compact, the physical files must no longer
-        carry the dropped column (the reclaim drop_column promises)."""
+        """After drop_column + compact + vacuum, the physical files must
+        no longer carry the dropped column (the reclaim drop_column
+        promises)."""
         from pyspark.sql import functions as F
 
         t = Table.create(spark, make_schema("t4"), home=tmp_home)
@@ -1199,6 +1317,7 @@ class TestDropColumn:
         t.write(rows_df(spark, [T0 + 1]).withColumn("venue", F.lit("X")))
         t.drop_column("venue")
         t.compact()
+        t.vacuum(grace_seconds=0)
         import glob
         files = glob.glob(f"{t.path}/parquet/dt=*/*.parquet")
         raw = spark.read.parquet(*files)
@@ -1214,11 +1333,6 @@ class TestDeleteWhere:
     def make(self, spark, tmp_home, name="tdel"):
         return Table.create(spark, make_schema(name), home=tmp_home,
                             manifest=True)
-
-    def test_requires_manifest(self, spark, tmp_home):
-        t = Table.create(spark, make_schema(), home=tmp_home)
-        with pytest.raises(ValueError, match="manifest=True"):
-            t.delete_where("price > 0")
 
     def test_delete_rows_and_row_count(self, spark, tmp_home):
         t = self.make(spark, tmp_home)
@@ -1625,12 +1739,6 @@ class TestMergeInto:
         assert got[T0 + 1] == 500.0 and got[T0 + 60] == 900.0
         assert "_zkey" not in t.scan().columns
 
-    def test_merge_requires_manifest(self, spark, tmp_home):
-        t = Table.create(spark, make_schema("tmrgl"), home=tmp_home)
-        with pytest.raises(ValueError, match="manifest"):
-            t.merge_into(self.src(spark, [(T0, "A", 1.0, 1)]),
-                         on="ts")
-
 
 class TestChangesBetween:
     """Row-level CDC between snapshots (r17): derived from the COW
@@ -1762,9 +1870,6 @@ class TestChangesBetween:
         t.vacuum(grace_seconds=0.0)
         with pytest.raises(ValueError, match="no snapshot"):
             t.changes_between(v)          # vacuumed away
-        tl = Table.create(spark, make_schema("tcdcl"), home=tmp_home)
-        with pytest.raises(ValueError, match="manifest"):
-            tl.changes_between(0)
 
 
 class TestMaintenanceStress:
@@ -2361,6 +2466,3 @@ class TestDescribeFiles:
         d2 = t2.describe_files().collect()
         assert len(d2) == 2
         assert all(r.rows is None and r.ts_min is None for r in d2)
-        tl = Table.create(spark, make_schema("tdfl"), home=tmp_home)
-        with pytest.raises(ValueError, match="manifest"):
-            tl.describe_files()

@@ -12,7 +12,7 @@ add the reference's one real migration utility.
   monotonic-append check).
 - ``rows`` — the put_*/write() analogue for small programmatic appends.
 - ``stream_source`` — Structured Streaming file source factory with the
-  table's schema (pairs with streaming.ingest.stream_writer).
+  table's schema (pairs with streaming.ingest.stream_writer_table).
 - ``convert_column_type`` — port of scripts/convert_col.jl:1-61 (offline
   column type migration): rewrite a table's parquet with one column cast
   to a new type.
@@ -94,7 +94,7 @@ def rows(table: Table, data: list[tuple]) -> int:
 def stream_source(spark: SparkSession, table: Table, path: str,
                   fmt: str = "parquet", **options) -> DataFrame:
     """File-based streaming source with the table's schema; feed to
-    streaming.ingest.stream_writer for the ordered-append sink."""
+    streaming.ingest.stream_writer_table for the transactional sink."""
     return (spark.readStream.format(fmt).options(**options)
             .schema(table.schema.spark_schema())
             .load(path))
@@ -103,9 +103,14 @@ def stream_source(spark: SparkSession, table: Table, path: str,
 def convert_column_type(spark: SparkSession, name: str, column: str,
                         to_type: ColumnType, home: str | None = None) -> None:
     """Offline column type migration (scripts/convert_col.jl:1-61): read
-    every partition, cast ``column``, rewrite parquet, update the schema
-    sidecar.  Writes to a temp dir then swaps, so a failure mid-rewrite
-    leaves the original intact."""
+    every live file, cast ``column``, and publish the rewrite the way
+    ``Table.compact`` does — new files land beside the old ones and one
+    manifest flip replaces them — then update the schema sidecar.  A
+    failure mid-rewrite leaves the table as it was.  Migration is
+    OFFLINE: snapshots older than the flip keep the old column type
+    and do not read under the new schema."""
+    import uuid
+
     from pyspark.sql import functions as F
 
     t = Table.open(spark, name, home)
@@ -128,10 +133,9 @@ def convert_column_type(spark: SparkSession, name: str, column: str,
                         strict_u64=t.schema.strict_u64,
                         partition_dirs=list(t.schema.partition_dirs))
 
-    src = os.path.join(t.path, "parquet")
-    tmp = os.path.join(t.path, "parquet.migrating")
-    if os.path.exists(src):
-        df = t.df().withColumn(
+    src, base_files = t._cow_read()
+    if base_files:
+        df = t._read(base_files).withColumn(
             column,
             F.col(column).cast(new_schema.column(column)
                                .spark_type(new_schema.strict_u64)))
@@ -148,25 +152,11 @@ def convert_column_type(spark: SparkSession, name: str, column: str,
                     .write.mode("overwrite"))
         if t._meta.compression:
             writer = writer.option("compression", t._meta.compression)
-        writer.partitionBy("dt").parquet(tmp)
-        backup = src + ".old"
-        os.rename(src, backup)
-        os.rename(tmp, src)
-        import shutil
-        shutil.rmtree(backup)
-        if t._meta.manifest:
-            # the rewrite replaced every file; publish a fresh snapshot
-            # so manifest reads see the migrated tree.  (Migration is an
-            # OFFLINE operation — concurrent readers of older snapshots
-            # are not supported across it, unlike compact().)
-            files = [
-                f"{dt}/{f}" for dt in os.listdir(src)
-                if dt.startswith("dt=")
-                for f in os.listdir(os.path.join(src, dt))
-                if not f.startswith(("_", "."))
-            ]
-            t._commit_manifest(lambda doc: {**doc, "files": sorted(files)})
+        staging = os.path.join(t.path, "_staging", uuid.uuid4().hex)
+        writer.partitionBy("dt").parquet(staging)
+        t._flip_replacing(set(base_files), t._land_staging(staging, src),
+                          src, "convert_column_type")
 
-    t.schema = new_schema
-    t._meta.schema = new_schema.to_dict()
-    t._flush_meta()
+    with t._meta_lock():
+        t._meta.schema = new_schema.to_dict()
+        t._flush_meta()

@@ -10,8 +10,9 @@ watermark are dropped by windowed aggregations (the explicit late-data
 policy SURVEY.md §7 calls for where zdb simply panicked).
 
 Pieces:
-- ``stream_writer``  — readStream → derive dt → partitionBy(dt) Parquet
-  append sink with checkpoint (exactly-once file sink).
+- ``stream_writer_table`` — readStream → ``foreachBatch`` →
+  ``Table.write(txn=...)``: each micro-batch commits like a batch append,
+  and the (app, batch id) txn in the manifest makes replays no-ops.
 - ``stream_resample`` — windowed OHLCV aggregation with watermark: the
   streaming version of ohlcv.resample (same operator; BASELINE.json's
   stated approach).
@@ -30,9 +31,8 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (LongType, StringType, StructField, StructType)
 
 from ..functions.scalar import nanos_to_ts
-from ..schema import PartitionBy
 
-__all__ = ["stream_writer", "stream_writer_table", "stream_resample",
+__all__ = ["stream_writer_table", "stream_resample",
            "sessionize", "rollup_sink", "read_rollup",
            "apply_changes_to_rollup"]
 
@@ -48,34 +48,6 @@ def _default_app_id(checkpoint: str) -> str:
             + hashlib.md5(norm.encode()).hexdigest()[:8])
 
 
-def stream_writer(stream_df: DataFrame, path: str, checkpoint: str,
-                  ts_col: str = "ts",
-                  partition_by: PartitionBy = PartitionBy.DAY,
-                  ts_is_nanos: bool = True,
-                  trigger_seconds: int | None = None):
-    """Append-mode Parquet sink partitioned by derived ``dt``.
-
-    The checkpoint gives exactly-once semantics over the file sink — the
-    streaming stand-in for zdb's flush/truncate durability step
-    (/root/reference/src/table/write.rs:212-234).  Returns the started
-    StreamingQuery.
-    """
-    ts_utc = nanos_to_ts(ts_col) if ts_is_nanos else F.col(ts_col)
-    fmt = partition_by.date_format
-    out = stream_df.withColumn(
-        "dt", F.date_format(ts_utc, fmt) if fmt else F.lit("all"))
-    writer = (out.writeStream.format("parquet")
-              .option("path", path)
-              .option("checkpointLocation", checkpoint)
-              .partitionBy("dt")
-              .outputMode("append"))
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def stream_writer_table(stream_df: DataFrame, table, checkpoint: str,
                         trigger_seconds: int | None = None,
                         app_id: str | None = None,
@@ -84,13 +56,11 @@ def stream_writer_table(stream_df: DataFrame, table, checkpoint: str,
     ``foreachBatch`` → ``Table.write(txn=(app, batch_id))`` → manifest
     commit.
 
-    This is what unifies streaming with manifest-mode snapshot isolation:
-    the raw parquet file sink (``stream_writer``) drops files the
-    manifest log never hears about, so stream-fed tables used to be
-    restricted to directory-listing reads.  Routing each micro-batch
-    through ``Table.write`` instead means every batch stages, moves, and
-    commits exactly like a batch append — a concurrent reader sees
-    whole batches or nothing, ``snapshot()``/time travel work over
+    This is what unifies streaming with snapshot isolation: a raw
+    parquet file sink would drop files the manifest never hears about.
+    Routing each micro-batch through ``Table.write`` instead means every
+    batch stages, moves, and commits exactly like a batch append — a
+    concurrent reader sees whole batches or nothing, ``snapshot()``/time travel work over
     streamed data, and the (app_id, batch_id) txn recorded inside the
     manifest makes post-failure batch replays no-ops (foreachBatch is
     at-least-once; the txn check upgrades it to exactly-once visibility).

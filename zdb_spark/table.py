@@ -69,24 +69,13 @@ def zdb_home() -> str:
 
 @dataclass
 class _Meta:
-    """Sidecar `_meta` payload (/root/reference/src/table/meta.rs:25-37).
-
-    ``manifest=True`` switches the table to snapshot-manifest reads:
-    scans list files from the latest ``_manifest/v*.json`` instead of the
-    directory tree, giving batch-level atomic visibility (a reader can
-    never observe a half-moved batch) — the property object stores need,
-    where staged renames are neither atomic nor instant.
+    """Sidecar `_meta` payload (/root/reference/src/table/meta.rs:25-37):
+    the schema and the table's settings.  Row stats and streaming txn
+    marks live in the manifest head, which every commit publishes
+    atomically with the file list it describes.
     """
 
     schema: dict
-    row_count: int = 0
-    min_ts: int | None = None  # first ts ever written (nanos)
-    max_ts: int | None = None  # last ts ever written (nanos)
-    manifest: bool = False
-    # last committed batch id per streaming writer app (listing-mode
-    # fallback; manifest mode records txns INSIDE the manifest json so
-    # the batch-id advance and the file-list flip are one atomic rename)
-    txns: dict = None
     # schema-evolution state: columns added AFTER data existed, mapped to
     # their read-time default (None → NULL), and columns dropped (their
     # bytes stay in old files; reads project them away).  Either
@@ -115,8 +104,6 @@ class _Meta:
     checks: dict = None
 
     def __post_init__(self):
-        if self.txns is None:
-            self.txns = {}
         if self.added_defaults is None:
             self.added_defaults = {}
         if self.dropped_columns is None:
@@ -128,8 +115,15 @@ class _Meta:
         return json.dumps(self.__dict__, indent=2)
 
     @classmethod
-    def from_json(cls, s: str) -> "_Meta":
-        return cls(**json.loads(s))
+    def from_dict(cls, d: dict) -> "_Meta":
+        """Known fields only: a sidecar from before every table was a
+        manifest table also carries ``_LEGACY_KEYS``."""
+        return cls(**{k: v for k, v in d.items()
+                      if k in cls.__dataclass_fields__})
+
+
+# sidecar keys of the retired listing-mode format (see ``Table._upgrade``)
+_LEGACY_KEYS = ("manifest", "row_count", "min_ts", "max_ts", "txns")
 
 
 _PARQUET_CODECS = {"snappy", "zstd", "gzip", "lz4", "brotli",
@@ -155,18 +149,17 @@ class Table:
 
     @classmethod
     def create(cls, spark: SparkSession, schema: Schema,
-               home: str | None = None, manifest: bool = False,
+               home: str | None = None, manifest: bool = True,
                compression: str | None = None,
                zorder_by: list[str] | None = None,
                zorder_bits: int = 12,
                zorder_bounds: dict[str, tuple[float, float]] | None = None
                ) -> "Table":
-        """``manifest=True`` opts the table into snapshot-manifest reads
-        (see ``_Meta``).  Stream-fed manifest tables are supported via
-        ``streaming.ingest.stream_writer_table`` (foreachBatch →
-        ``write(txn=...)`` → manifest commit); the raw parquet file sink
-        (``stream_writer``) bypasses the manifest log and is for
-        listing-mode tables only.
+        """Every table is a manifest table: reads list files from the
+        latest ``_manifest/v*.json``, so a reader sees whole batches or
+        nothing.  ``manifest=False`` (the retired listing mode) raises.
+        Streams feed a table through
+        ``streaming.ingest.stream_writer_table``.
 
         ``compression`` pins the table's parquet codec (zstd for cold
         archival tables, lz4/snappy for hot scan paths — the per-table
@@ -187,6 +180,10 @@ class Table:
         The trade: in-file sort becomes (dt, curve, ts), so intra-day
         ts row-group pruning is shared with the value dims — the
         sqrt-span trade measured in SCALE.md §Z-order."""
+        if not manifest:
+            raise ValueError(
+                "manifest=False: listing-mode tables were removed; every "
+                "table is a manifest table")
         if compression is not None and \
                 compression not in _PARQUET_CODECS:
             raise ValueError(
@@ -238,8 +235,8 @@ class Table:
         if os.path.exists(meta_path):
             raise TableExistsError(f"table {schema.name!r} already exists")
         os.makedirs(path, exist_ok=True)
-        meta = _Meta(schema=schema.to_dict(), manifest=manifest,
-                     compression=compression, zorder=zorder)
+        meta = _Meta(schema=schema.to_dict(), compression=compression,
+                     zorder=zorder)
         with open(meta_path, "w") as f:
             f.write(meta.to_json())
         return cls(spark, schema, path, meta)
@@ -252,8 +249,43 @@ class Table:
         if not os.path.exists(meta_path):
             raise TableNotFoundError(f"table {name!r} does not exist")
         with open(meta_path) as f:
-            meta = _Meta.from_json(f.read())
-        return cls(spark, Schema.from_dict(meta.schema), path, meta)
+            raw = json.load(f)
+        meta = _Meta.from_dict(raw)
+        t = cls(spark, Schema.from_dict(meta.schema), path, meta)
+        if any(k in raw for k in _LEGACY_KEYS):
+            t._upgrade(raw)
+        return t
+
+    def _upgrade(self, raw: dict) -> None:
+        """Upgrade a sidecar written before every table was a manifest
+        table, once.  A listing-mode table gets manifest v1 by exclusive
+        create: exactly the files its listing read saw (a file sink's
+        ``_spark_metadata`` log included), with the sidecar's row stats,
+        txn marks and per-file stats.  Then the sidecar is rewritten
+        without ``_LEGACY_KEYS``.  A crash between the two steps leaves
+        the old sidecar, so the next open finishes the upgrade; its v1
+        publish loses the exclusive create and changes nothing."""
+        if not raw.get("manifest"):
+            p = os.path.join(self.path, "parquet")
+            files = []
+            if os.path.isdir(p):
+                files = sorted({self._rel(u) for u in self.spark.read.schema(
+                    self.schema.spark_schema()).parquet(p).inputFiles()})
+            head = {"txns": raw.get("txns") or {},
+                    "row_count": raw.get("row_count", 0),
+                    "min_ts": raw.get("min_ts"), "max_ts": raw.get("max_ts")}
+            self._try_publish_manifest(1, self._head_from_files(
+                files, head, self._collect_file_stats(p, files)))
+        with self._meta_lock():
+            self._reload_meta()
+            self._flush_meta()
+
+    def _reload_meta(self) -> None:
+        """Re-read the sidecar, so an edit made under ``_meta_lock``
+        applies to the latest schema and settings, not this handle's."""
+        with open(os.path.join(self.path, "_meta")) as f:
+            self._meta = _Meta.from_dict(json.load(f))
+        self.schema = Schema.from_dict(self._meta.schema)
 
     @classmethod
     def create_or_open(cls, spark: SparkSession, schema: Schema,
@@ -313,11 +345,9 @@ class Table:
         (app, batch): a batch id ≤ the last committed id for that app is
         skipped (returns 0).  This is the streaming exactly-once hook —
         ``foreachBatch`` retries after a failure re-deliver the same
-        batch id, and in manifest mode the txn high-water mark is stored
-        INSIDE the manifest json, so the id advance and the file-list
-        flip commit in one atomic rename (the Delta txn-appId pattern).
-        Listing mode records it in the sidecar — best-effort, since file
-        visibility there isn't transactional to begin with.
+        batch id, and the txn high-water mark is stored INSIDE the
+        manifest json, so the id advance and the file-list flip commit
+        in one atomic publish (the Delta txn-appId pattern).
 
         Returns the number of rows appended (0 for a replayed txn).
         """
@@ -405,9 +435,8 @@ class Table:
         # other's in-flight task files (observed: FileNotFoundException at
         # commitJob under 4 concurrent appends).  Unique staging + rename
         # (part filenames already carry job UUIDs) makes concurrent
-        # appends compose; batch-level atomic VISIBILITY would need a
-        # manifest log on top (readers may glimpse a partially-moved
-        # batch after a mid-move crash).
+        # appends compose; the manifest publish then makes the whole
+        # batch visible at once.
         staging = os.path.join(self.path, "_staging", uuid.uuid4().hex)
         dest_root = os.path.join(self.path, "parquet")
         try:
@@ -439,27 +468,10 @@ class Table:
                 raise OutOfOrderError(
                     f"Timestamp {lo} is out of order (table max_ts "
                     f"{cur_max})")
-            if self._meta.manifest:
-                # LOCK-FREE commit: part filenames are unique, so moves
-                # need no coordination; visibility + stats + txn marks
-                # all flip in ONE optimistic CAS manifest publish.
-                return self._commit_append_cas(staging, dest_root,
-                                               n, lo, hi, txn)
-            # Listing mode: take the table lock BEFORE moving files into
-            # the data tree — a lock timeout then aborts with the batch
-            # still in _staging (invisible, cleaned below) instead of
-            # leaving visible rows with a stale sidecar.  The moves are
-            # renames (microseconds), so holding the lock across them
-            # costs concurrent appends nothing.
-            moved: list[str] = []
-            with self._meta_lock():
-                if txn is not None and self._last_txn(txn[0]) >= txn[1]:
-                    return 0  # lost the race to a concurrent replay
-                self._move_staged(staging, dest_root, moved)
-                self._merge_meta_locked(n, lo, hi, txn=txn)
+            return self._commit_append_cas(staging, dest_root,
+                                           n, lo, hi, txn)
         finally:
             shutil.rmtree(staging, ignore_errors=True)
-        return n
 
     def _clustering(self, out: DataFrame, cluster_by: list[str] | None,
                     ts: str) -> tuple[DataFrame, list[str], bool]:
@@ -515,8 +527,8 @@ class Table:
         ``v+1``; the loser's exclusive create fails, it re-reads ``v+1``
         and publishes ``v+2`` — zero lost batches, no lock to leak or
         steal.  This is the object-store-safe protocol (exclusive create
-        maps to a conditional PUT); the O_EXCL lock file survives only
-        for listing-mode sidecar merges.
+        maps to a conditional PUT); the O_EXCL lock file guards only
+        sidecar edits.
 
         A replayed streaming txn detected inside the CAS loop aborts:
         its already-moved files are unlinked (they were never visible).
@@ -594,53 +606,23 @@ class Table:
 
         return self._commit_manifest_head(upd)
 
-    def _merge_meta_locked(self, n: int, lo: int, hi: int,
-                           txn: tuple[str, int] | None = None) -> None:
-        """Fold one appended batch into the sidecar; caller HOLDS the
-        lock.  LISTING-MODE ONLY — manifest tables commit everything
-        (files, stats, txns) through the lock-free CAS path instead.
-
-        Concurrent appends are data-safe by construction (each job writes
-        uniquely-named part files); the sidecar was the only race.  Under
-        the lock the CURRENT sidecar is re-read and the batch merged
-        additively (count adds, min/max fold), so two writers' updates
-        compose instead of last-write-wins.  The out-of-order check
-        remains best-effort against the max_ts read at write() entry —
-        single-writer semantics, like the reference.  NB: O_EXCL lock
-        files coordinate writers on a POSIX/HDFS-like FS; object stores
-        should use manifest mode, whose CAS commit needs no lock.
-        """
-        meta_path = os.path.join(self.path, "_meta")
-        if os.path.exists(meta_path):
-            with open(meta_path) as f:
-                cur = _Meta.from_json(f.read())
-        else:
-            cur = self._meta
-        cur.row_count += n
-        cur.min_ts = lo if cur.min_ts is None else min(cur.min_ts, lo)
-        cur.max_ts = hi if cur.max_ts is None else max(cur.max_ts, hi)
-        if txn is not None:
-            cur.txns[txn[0]] = txn[1]  # listing-mode fallback record
-        self._meta = cur
-        self._flush_meta()
-
     @contextmanager
     def _meta_lock(self, timeout_s: float = 10.0, stale_s: float = 60.0):
-        """O_EXCL lock file serializing every sidecar/manifest mutation
-        (append merge, compaction flip, vacuum).
+        """O_EXCL lock file serializing sidecar edits: add/drop column,
+        add/drop check, type conversion and the upgrade in ``open``.
+        Manifest commits never take it (see ``_commit_manifest_head``).
 
         The lock file records ``pid started_at`` so operators can see the
         holder.  A lock whose mtime is older than ``stale_s`` is presumed
         abandoned by a crashed writer (every legitimate hold is
-        milliseconds — renames + one json write) and is STOLEN: rename to
+        milliseconds — one json write) and is STOLEN: rename to
         a unique grave name (atomic — exactly one stealer wins), re-check
         age on the renamed file (if a fresh lock slipped into the window
         it is renamed straight back), then retry acquisition.  Without
-        reclamation one crashed writer blocks every future append/compact
-        /vacuum forever.
+        reclamation one crashed writer blocks every future sidecar edit
+        forever.
         """
         import time as _time
-        import uuid as _uuid
 
         lock = os.path.join(self.path, "_meta.lock")
         deadline = _time.time() + timeout_s
@@ -655,7 +637,7 @@ class Table:
                 except OSError:
                     continue  # holder released between open and stat
                 if age >= stale_s:
-                    grave = f"{lock}.stale.{_uuid.uuid4().hex}"
+                    grave = f"{lock}.stale.{uuid.uuid4().hex}"
                     try:
                         os.rename(lock, grave)
                     except OSError:
@@ -773,11 +755,9 @@ class Table:
         along: per-file [rows, {col: min}, {col: max}] for the files
         sealed into this segment, so the head stays O(KB) while stats
         coverage stays O(file-count) — the Delta-checkpoint shape."""
-        import uuid as _uuid
-
         d = self._manifest_dir()
         os.makedirs(d, exist_ok=True)
-        name = f"seg-{_uuid.uuid4().hex}.json"
+        name = f"seg-{uuid.uuid4().hex}.json"
         tmp = os.path.join(d, f".{name}.tmp")
         doc = {"files": files}
         if stats:
@@ -857,17 +837,7 @@ class Table:
 
     def _last_txn(self, app_id: str) -> int:
         """Last committed streaming batch id for ``app_id`` (-1 if none)."""
-        if self._meta.manifest:
-            _, head = self._latest_head()
-            txns = head["txns"]
-        else:
-            meta_path = os.path.join(self.path, "_meta")
-            if os.path.exists(meta_path):
-                with open(meta_path) as f:
-                    txns = _Meta.from_json(f.read()).txns
-            else:
-                txns = self._meta.txns
-        return int(txns.get(app_id, -1))
+        return int(self._latest_head()[1]["txns"].get(app_id, -1))
 
     def _commit_manifest_head(self, update_fn, max_retries: int = 200):
         """Optimistic version-check commit (the multi-writer protocol).
@@ -933,11 +903,9 @@ class Table:
         is always unlinked; a crash between write and link leaves only a
         ``.tmp`` orphan that ``vacuum()`` sweeps.
         """
-        import uuid as _uuid
-
         d = self._manifest_dir()
         os.makedirs(d, exist_ok=True)
-        tmp = os.path.join(d, f".v{version:012d}.{_uuid.uuid4().hex}.tmp")
+        tmp = os.path.join(d, f".v{version:012d}.{uuid.uuid4().hex}.tmp")
         with open(tmp, "w") as f:
             json.dump(doc, f)
             f.flush()
@@ -961,19 +929,16 @@ class Table:
             return self._files_of_head(self._normalize_head(json.load(f)))
 
     def snapshot(self, version: int) -> DataFrame:
-        """Time-travel read: the table exactly as of manifest ``version``
-        (manifest-mode tables only), read through ``_read`` in the
-        current schema, as ``df()`` reads the latest one.  Compaction
-        rewrites files, so pre-compaction snapshots are readable only
-        until ``vacuum()``."""
-        if not self._meta.manifest:
-            raise ValueError("snapshot() requires a manifest=True table")
+        """Time-travel read: the table exactly as of manifest ``version``,
+        read through ``_read`` in the current schema, as ``df()`` reads
+        the latest one.  Compaction rewrites files, so pre-compaction
+        snapshots are readable only until ``vacuum()``."""
         return self._read(self._version_files(version))
 
     def changes_between(self, from_version: int,
                         to_version: int | None = None) -> DataFrame:
         """Row-level change feed between two snapshots (the Delta CDF
-        shape, r17; manifest tables only): every table column plus
+        shape, r17): every table column plus
         ``dt`` and a ``_change_type`` column — ``'insert'`` for rows
         present at ``to_version`` but not ``from_version``,
         ``'delete'`` for the reverse; an update surfaces as its
@@ -1008,9 +973,6 @@ class Table:
         on the empty path and the file-diff path alike, so unioning
         successive feed batches never schema-mismatches on an empty
         batch (ADVICE r17)."""
-        if not self._meta.manifest:
-            raise ValueError(
-                "changes_between() requires a manifest=True table")
         if to_version is None:
             to_version = self._latest_head()[0]
         if from_version > to_version:
@@ -1054,26 +1016,16 @@ class Table:
         return ins.unionByName(del_) if del_ is not None else ins
 
     def _land_staging(self, staging: str, src: str) -> list[str]:
-        """Move staged ``dt=*/part`` files into the live tree and
-        return their manifest-relative paths — the ONE copy of the
-        rewrite-landing rules (unique part names alongside the old
-        files, hidden files skipped, staging removed), shared by
-        ``compact()`` and ``_rewrite_where`` so a future change to
-        the landing semantics cannot silently miss one of them (r16
-        review finding)."""
+        """Move staged ``dt=*/part`` files into the live tree (the
+        append's ``_move_staged``: unique part names alongside the old
+        files, hidden files skipped), remove the staging dir and return
+        their manifest-relative paths — shared by every rewrite
+        (``compact()``, ``_rewrite_where``, ``merge_into``,
+        ``convert_column_type``) so a future change to the landing
+        semantics cannot silently miss one of them (r16 review
+        finding)."""
         moved: list[str] = []
-        for dt_dir in os.listdir(staging):
-            sdir = os.path.join(staging, dt_dir)
-            if not (os.path.isdir(sdir) and dt_dir.startswith("dt=")):
-                continue
-            ddir = os.path.join(src, dt_dir)
-            os.makedirs(ddir, exist_ok=True)
-            for fname in os.listdir(sdir):
-                if fname.startswith(("_", ".")):
-                    continue
-                os.replace(os.path.join(sdir, fname),
-                           os.path.join(ddir, fname))
-                moved.append(f"{dt_dir}/{fname}")
+        self._move_staged(staging, src, moved)
         shutil.rmtree(staging, ignore_errors=True)
         return moved
 
@@ -1084,9 +1036,9 @@ class Table:
         """CAS-flip a file-set rewrite: every path in ``replaced``
         leaves the manifest, ``moved`` enters, row_count adjusts by
         ``row_count_delta`` — the ONE copy of the supersede-guard +
-        abort protocol shared by ``compact()`` and ``_rewrite_where``
-        (r16 review pass 2).  ``bounds=(lo, hi)`` additionally folds a
-        ts range into the head's min/max stats — ``merge_into``'s
+        abort protocol shared by every rewrite (r16 review pass 2).
+        ``bounds=(lo, hi)`` additionally folds a ts range into the
+        head's min/max stats — ``merge_into``'s
         inserts can extend the table beyond the bounds the appends
         recorded, and a flip that left them stale would make
         ``get_first_ts``/``get_last_ts`` lie to the pruning layer.  If ANY replaced file was already
@@ -1166,9 +1118,7 @@ class Table:
         (retry) instead of resurrecting deleted rows by keeping the
         other writer's rewrite of them.  ``row_count`` is maintained;
         min/max ts bounds stay unchanged (conservative — still valid
-        for pruning).  Manifest tables only: listing mode has no
-        snapshot to isolate against (use manifest=True, or filter at
-        read)."""
+        for pruning)."""
         return self._rewrite_where(condition, "delete", None)
 
     def update_where(self, condition,
@@ -1244,10 +1194,6 @@ class Table:
         merged — re-run for late arrivals.  Returns
         ``{"matched", "updated", "deleted", "inserted"}``.
         """
-        if not self._meta.manifest:
-            raise ValueError(
-                "merge_into() requires a manifest=True table "
-                "(copy-on-write needs snapshot isolation)")
         if when_matched not in ("update", "delete", None):
             raise ValueError(
                 f"when_matched must be 'update', 'delete' or None, "
@@ -1298,8 +1244,6 @@ class Table:
                 if c not in known:
                     raise KeyError(
                         f"merge_into: unknown column {c!r}")
-        import uuid
-
         # normalize key columns to the declared type + ts resolution
         # floor so raw-source keys match what write() stored
         # A non-deterministic source (rand()/shuffle-order-dependent
@@ -1349,7 +1293,7 @@ class Table:
                         "rewritten ambiguously; de-duplicate the source "
                         "on the merge key first")
 
-            src, base_files, rel = self._cow_read()
+            src, base_files = self._cow_read()
             affected: dict[str, int] = {}
             if base_files:
                 # Manifest data skipping for the discovery semi-join
@@ -1390,7 +1334,8 @@ class Table:
                         .groupBy("_f")
                         .agg(F.count(F.lit(1)).alias("_n"))
                         .collect())
-                affected = {rel(r["_f"]): int(r["_n"]) for r in hits}
+                affected = {self._rel(r["_f"]): int(r["_n"])
+                            for r in hits}
             n_matched = sum(affected.values())
 
             data_cols = [c.name for c in self.schema.columns]
@@ -1531,39 +1476,30 @@ class Table:
         finally:
             snorm.unpersist()
 
-    def _cow_read(self):
-        """``(src, base_files, rel)`` — the shared snapshot machinery of
-        the COW rewrite family (``_rewrite_where``, ``merge_into``):
-        the LATEST committed manifest (read it with ``_read``) plus the
-        file-uri→manifest-relative mapper.  ``rel`` uses realpath on
-        BOTH sides (ADVICE r16): Spark reports RESOLVED file paths, so
-        a symlinked component in the table root (/tmp → /private/tmp)
-        must not make every flip abort with a misleading
+    def _cow_read(self) -> tuple[str, list[str]]:
+        """``(src, base_files)`` — the snapshot every rewrite (compact,
+        the COW family, type conversion) starts from: the data root and
+        the LATEST committed manifest's files (read them with
+        ``_read``)."""
+        return os.path.join(self.path, "parquet"), self._latest_manifest()[1]
+
+    def _rel(self, uri: str) -> str:
+        """Manifest-relative path of a file URI Spark reported, with
+        realpath on BOTH sides (ADVICE r16): Spark reports RESOLVED file
+        paths, so a symlinked component in the table root (/tmp →
+        /private/tmp) must not make every flip abort with a misleading
         'lost a rewrite race'."""
         import urllib.parse
 
-        src = os.path.join(self.path, "parquet")
-        _, base_files = self._latest_manifest()
-        abs_src = os.path.realpath(src)
-
-        def rel(uri: str) -> str:
-            p = urllib.parse.unquote(urllib.parse.urlparse(uri).path)
-            return os.path.relpath(os.path.realpath(p), abs_src)
-
-        return src, base_files, rel
+        p = urllib.parse.unquote(urllib.parse.urlparse(uri).path)
+        return os.path.relpath(os.path.realpath(p), os.path.realpath(
+            os.path.join(self.path, "parquet")))
 
     def _rewrite_where(self, condition, mode: str,
                        assignments: dict[str, object] | None) -> int:
-        if not self._meta.manifest:
-            raise ValueError(
-                f"{mode}_where() requires a manifest=True table "
-                "(copy-on-write needs snapshot isolation); filter at "
-                "read, or recreate the table with manifest=True")
-        import uuid
-
         cond = (F.expr(condition) if isinstance(condition, str)
                 else condition)
-        src, base_files, rel = self._cow_read()
+        src, base_files = self._cow_read()
         if not base_files:
             return 0
         self._reject_nondeterministic(self._read(base_files), cond,
@@ -1589,7 +1525,7 @@ class Table:
         if not hits:
             return 0
 
-        affected = {rel(r["_f"]): int(r["_n"]) for r in hits}
+        affected = {self._rel(r["_f"]): int(r["_n"]) for r in hits}
         n_deleted = sum(affected.values())
         if mode == "delete":
             # survivors: NOT(cond IS TRUE) — NULL evaluations keep rows
@@ -1954,19 +1890,15 @@ class Table:
         ``write()`` moves part files into place BEFORE committing them to
         the manifest, so an unreferenced file younger than the grace
         window may simply not be committed yet and is left alone (the
-        same reason Delta's VACUUM has a retention period).  The manifest
-        flip itself is read under the table lock.
+        same reason Delta's VACUUM has a retention period).  The latest
+        head is read without a lock: published versions are immutable.
         """
-        if not self._meta.manifest:
-            raise ValueError("vacuum() requires a manifest=True table")
         if keep_versions < 0:
             raise ValueError(f"keep_versions must be >= 0, "
                              f"got {keep_versions}")
         import time as _time
 
         now = _time.time()
-        # no lock: manifest versions are immutable once published (CAS
-        # protocol), so a plain read of the latest is always consistent
         v, head = self._latest_head()
         keep = set(self._files_of_head(head))
         live_segs = {s["name"] for s in head["segments"]}
@@ -2043,11 +1975,11 @@ class Table:
     # ------------------------------------------------------------------ #
     # scan path (/root/reference/src/table/scan.rs:43-89)                #
     # ------------------------------------------------------------------ #
-    def _read(self, files: list[str] | None = None) -> DataFrame:
+    def _read(self, files: list[str]) -> DataFrame:
         """The one snapshot reader: manifest-relative ``files`` under
         ``basePath`` (hive discovery keeps ``dt``, and with it directory
-        pruning, over an explicit list), or the whole data directory
-        when None (listing mode), with added-column defaults filled in.
+        pruning, over an explicit list), with added-column defaults
+        filled in.
 
         The reader gets an explicit schema, the sidecar's data columns
         nullable as every parquet read reports them: that spares Spark
@@ -2061,7 +1993,7 @@ class Table:
         from pyspark.sql import types as T
 
         p = os.path.join(self.path, "parquet")
-        if files == [] or files is None and not os.path.exists(p):
+        if not files:
             return self.spark.createDataFrame(
                 [], self.schema.spark_schema().add("dt", "string"))
         schema = T.StructType([
@@ -2070,12 +2002,8 @@ class Table:
         if ((self._meta.added_defaults or self._meta.dropped_columns)
                 and self.schema.partition_by.date_format is not None):
             schema = schema.add("dt", T.StringType())
-        reader = self.spark.read.schema(schema)
-        if files is None:
-            out = reader.parquet(p)
-        else:
-            out = (reader.option("basePath", p)
-                   .parquet(*[os.path.join(p, f) for f in files]))
+        out = (self.spark.read.schema(schema).option("basePath", p)
+               .parquet(*[os.path.join(p, f) for f in files]))
         for name, default in self._meta.added_defaults.items():
             if default is not None:
                 out = out.withColumn(name, F.coalesce(
@@ -2084,22 +2012,18 @@ class Table:
         return out
 
     def df(self) -> DataFrame:
-        # manifest tables read only the files the manifest committed
-        if self._meta.manifest:
-            return self._read(self._latest_manifest()[1])
-        return self._read()
+        return self._read(self._latest_manifest()[1])
 
     def _df_pruned(self, ts_bounds: tuple | None) -> DataFrame:
         """Snapshot DataFrame with manifest-level data skipping (r18):
         ``ts_bounds=(lo, hi)`` (either end None-able, nanos,
         inclusive) prunes the FILE LIST itself by the per-file stats
         every commit records — Spark then never even opens a footer
-        for a file outside the range.  Falls back to the plain
-        snapshot read when there is nothing to prune with; the caller
-        must still apply the row-level predicate (stats pruning is
-        file-granular)."""
+        for a file outside the range.  Falls back to ``df()`` when
+        there is nothing to prune with; the caller must still apply the
+        row-level predicate (stats pruning is file-granular)."""
         lo, hi = ts_bounds if ts_bounds is not None else (None, None)
-        if not self._meta.manifest or (lo is None and hi is None):
+        if lo is None and hi is None:
             return self.df()
         _, head = self._latest_head()
         return self._read(self._prune_files_by_stats(
@@ -2117,21 +2041,17 @@ class Table:
         byte-identical and the default can be changed by a later
         migration).  New writes must carry the column — or omit it and
         have ``default`` filled in (write-time fill uses the same
-        default).  Runs under the meta lock; on manifest tables the
-        sidecar schema is still the single schema authority, so the CAS
-        file-list flips are unaffected.
+        default).  Runs under the meta lock; the sidecar schema is the
+        single schema authority, so the CAS file-list flips are
+        unaffected.
         """
         if any(c.name == name for c in self.schema.columns) or name == "dt":
             raise ValueError(f"column {name!r} already exists")
         _validate_default(name, col_type, default)
         with self._meta_lock():
-            meta_path = os.path.join(self.path, "_meta")
-            if os.path.exists(meta_path):
-                with open(meta_path) as f:
-                    self._meta = _Meta.from_json(f.read())
-                self.schema = Schema.from_dict(self._meta.schema)
-                if any(c.name == name for c in self.schema.columns):
-                    raise ValueError(f"column {name!r} already exists")
+            self._reload_meta()
+            if any(c.name == name for c in self.schema.columns):
+                raise ValueError(f"column {name!r} already exists")
             if name in self._meta.dropped_columns:
                 # old files still hold the dropped column, possibly with
                 # a different type — an explicit-schema read over them
@@ -2183,11 +2103,7 @@ class Table:
                     "first, or pass validate_existing=False to "
                     "enforce forward-only")
         with self._meta_lock():
-            meta_path = os.path.join(self.path, "_meta")
-            if os.path.exists(meta_path):
-                with open(meta_path) as f:
-                    self._meta = _Meta.from_json(f.read())
-                self.schema = Schema.from_dict(self._meta.schema)
+            self._reload_meta()
             if name in self._meta.checks:
                 raise ValueError(f"check {name!r} already exists")
             self._meta.checks[name] = expr
@@ -2196,10 +2112,7 @@ class Table:
     def drop_check(self, name: str) -> None:
         """Remove a CHECK constraint; rows already written stay."""
         with self._meta_lock():
-            meta_path = os.path.join(self.path, "_meta")
-            if os.path.exists(meta_path):
-                with open(meta_path) as f:
-                    self._meta = _Meta.from_json(f.read())
+            self._reload_meta()
             if name not in self._meta.checks:
                 raise KeyError(f"no check named {name!r}")
             del self._meta.checks[name]
@@ -2214,9 +2127,6 @@ class Table:
         reads, no Spark job against the data; the frame is
         file-count-sized, which is exactly what an operator debugging
         a pruning decision or a compaction policy wants to eyeball."""
-        if not self._meta.manifest:
-            raise ValueError(
-                "describe_files() requires a manifest=True table")
         _, head = self._latest_head()
         files = self._files_of_head(head)
         stats = self._stats_of_head(head)
@@ -2267,8 +2177,9 @@ class Table:
 
     def drop_column(self, name: str) -> None:
         """METADATA-ONLY column drop: the sidecar schema shrinks; data
-        files are untouched (their bytes for the column become dead and
-        are reclaimed whenever ``compact()`` rewrites a partition).
+        files are untouched (their bytes for the column become dead
+        until ``compact()`` rewrites the files and ``vacuum()`` deletes
+        the superseded ones).
         Reads project the column away via the explicit evolved schema;
         writes carrying it have it dropped by schema conformance; the
         name cannot be re-added without an offline rewrite (old files
@@ -2277,11 +2188,7 @@ class Table:
         if name == self.schema.ts_col or name == "dt":
             raise ValueError(f"cannot drop {name!r}")
         with self._meta_lock():
-            meta_path = os.path.join(self.path, "_meta")
-            if os.path.exists(meta_path):
-                with open(meta_path) as f:
-                    self._meta = _Meta.from_json(f.read())
-                self.schema = Schema.from_dict(self._meta.schema)
+            self._reload_meta()
             if not any(c.name == name for c in self.schema.columns):
                 raise KeyError(f"no such column {name!r}")
             self.schema.columns = [c for c in self.schema.columns
@@ -2362,40 +2269,25 @@ class Table:
         restores ~``target_file_mb`` files and re-establishes the sort
         (optionally with ``cluster_by`` secondary clustering).
 
-        Directory-listing mode writes to a sibling dir then swaps, so a
-        mid-rewrite failure leaves the original intact.  Manifest mode
-        never swaps: compacted files land ALONGSIDE the old ones (unique
-        part names), the manifest flips atomically to the new set, and
-        the superseded files stay on disk — still serving concurrent
-        readers of older snapshots — until ``vacuum()``.  That ordering
-        is the object-store-safe pattern; a swap would yank files out
-        from under a reader holding the previous manifest.
+        Compacted files land ALONGSIDE the old ones (unique part
+        names), the manifest flips atomically to the new set, and the
+        superseded files stay on disk — still serving readers of older
+        snapshots — until ``vacuum()`` deletes them; compact plus vacuum
+        is what reclaims space.  That ordering is the object-store-safe
+        pattern; a swap would yank files out from under a reader
+        holding the previous manifest.
         """
-        src = os.path.join(self.path, "parquet")
-        if not os.path.exists(src):
+        # compact ONE committed snapshot, read ONCE: the rewrite
+        # DataFrame is built from the same file list remembered as
+        # base_files for the flip.  (Reading the manifest a second time
+        # via self.df() would race: an append committed between the two
+        # reads gets compacted into the rewrite AND preserved as a
+        # survivor at the flip — duplicated rows.)  Reading through the
+        # sidecar schema materializes added-column defaults and projects
+        # dropped columns away, so the rewrite drops their bytes.
+        src, base_files = self._cow_read()
+        if not base_files:
             return 0
-        # manifest mode compacts ONE committed snapshot, read ONCE: the
-        # rewrite DataFrame is built from the same file list remembered
-        # as base_files for the flip.  (Reading the manifest a second
-        # time via self.df() would race: an append committed between the
-        # two reads gets compacted into the rewrite AND preserved as a
-        # survivor at the flip — duplicated rows.)  Listing mode reads
-        # an EXPLICIT file snapshot too (not a directory scan at job
-        # time): the swap below preserves any file appended after this
-        # listing, so a concurrent write() is never lost.  Reading
-        # through the sidecar schema materializes added-column defaults
-        # and projects dropped columns away, so compact really reclaims
-        # their bytes as drop_column() promises.
-        if self._meta.manifest:
-            with self._meta_lock():
-                _, base_files = self._latest_manifest()
-        else:
-            base_files = [
-                os.path.relpath(os.path.join(root, f), src)
-                for root, _, files in os.walk(src) for f in files
-                if not f.startswith(("_", "."))]
-            if not base_files:
-                return 0
         df = self._read(base_files)
         # size from the snapshot's files — a directory walk would count
         # superseded/orphan files and over-split the output
@@ -2421,71 +2313,33 @@ class Table:
         if self._meta.compression:
             writer = writer.option("compression", self._meta.compression)
 
-        if self._meta.manifest:
-            import uuid
-
-            staging = os.path.join(self.path, "_staging", uuid.uuid4().hex)
-            writer.partitionBy("dt").parquet(staging)
-            moved = self._land_staging(staging, src)
-            # CAS flip, REPLACING only the snapshot we compacted: batches
-            # committed while the rewrite job ran are in (latest − base)
-            # and must survive — without this a concurrent append's files
-            # silently vanish from the table (and the next vacuum deletes
-            # them).  The CAS loop re-reads the latest doc on conflict,
-            # so an append that wins a version mid-flip is preserved.
-            self._flip_replacing(set(base_files), moved, src,
-                                 "compact")
-            return n_parts
-
-        tmp = src + ".compacting"
-        writer.partitionBy("dt").parquet(tmp)
-        backup = src + ".old"
-        # Swap under the sidecar lock (held for renames only — well under
-        # the lock's staleness window), then carry over every file a
-        # concurrent write() landed after the snapshot listing: without
-        # this, a batch committed mid-rewrite would ride into backup and
-        # be rmtree'd while the sidecar still counts its rows.
-        snap = set(base_files)
-        with self._meta_lock():
-            os.rename(src, backup)
-            os.rename(tmp, src)
-            for root, _, files in os.walk(backup):
-                for f in files:
-                    if f.startswith(("_", ".")):
-                        continue
-                    rel = os.path.relpath(os.path.join(root, f), backup)
-                    if rel in snap:
-                        continue
-                    dest = os.path.join(src, rel)
-                    os.makedirs(os.path.dirname(dest), exist_ok=True)
-                    os.replace(os.path.join(backup, rel), dest)
-        shutil.rmtree(backup)
+        staging = os.path.join(self.path, "_staging", uuid.uuid4().hex)
+        writer.partitionBy("dt").parquet(staging)
+        moved = self._land_staging(staging, src)
+        # CAS flip, REPLACING only the snapshot we compacted: batches
+        # committed while the rewrite job ran are in (latest − base) and
+        # must survive — without this a concurrent append's files
+        # silently vanish from the table (and the next vacuum deletes
+        # them).  The CAS loop re-reads the latest doc on conflict, so an
+        # append that wins a version mid-flip is preserved.
+        self._flip_replacing(set(base_files), moved, src, "compact")
         return n_parts
 
     # ------------------------------------------------------------------ #
     # metadata queries (/root/reference/src/table/meta.rs:39-67)         #
     # ------------------------------------------------------------------ #
+    # stats live directly in the manifest HEAD — reading them must not
+    # pay _latest_manifest_doc()'s O(file-count) list materialization
+    # (these run once per append)
     def get_first_ts(self) -> int | None:
-        # stats live directly in the manifest HEAD — reading them must
-        # not pay _latest_manifest_doc()'s O(file-count) list
-        # materialization (these run once per append)
-        if self._meta.manifest:
-            return self._latest_head()[1]["min_ts"]
-        return self._meta.min_ts
+        return self._latest_head()[1]["min_ts"]
 
     def get_last_ts(self) -> int | None:
-        if self._meta.manifest:
-            return self._latest_head()[1]["max_ts"]
-        return self._meta.max_ts
+        return self._latest_head()[1]["max_ts"]
 
     @property
     def row_count(self) -> int:
-        # manifest tables keep stats IN the manifest (single atomic
-        # source of truth for the CAS protocol); the sidecar only holds
-        # schema + mode flags there
-        if self._meta.manifest:
-            return self._latest_head()[1]["row_count"]
-        return self._meta.row_count
+        return self._latest_head()[1]["row_count"]
 
     # ------------------------------------------------------------------ #
     # dictionary endpoint (§2.4, /root/reference/src/server/mod.rs:84-122)
