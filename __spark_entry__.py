@@ -6065,56 +6065,26 @@ _MAX_DIRECT_AGE = 4
 # Rule-1 hand-list: reset each round to the gates whose behavior-relevant
 # code or oracle changed since their last green row.
 _CHANGED_THIS_ROUND = [
-    # round 19 (optimization round 2) — VERDICT r18 task 1: the r18
-    # driver sample contained NONE of the gates whose computation the
-    # r18 optimization round restructured (the "driver re-oracles every
-    # declared query after an optimization round" assumption was wrong —
-    # it samples WINDOW like any round).  Queue every gate whose r18
-    # rewrite is so far verified only by local bit-exact sweeps + unit
-    # pins, plus this round's own changes as they land; finalized by
-    # tools/changed_gates.py before the closing commit.  (The r18
-    # queue — schema_evolution, rollup_maintain — both took green r18
-    # driver rows.)
+    # round 19 (optimization round 2) queued the gates the r18/r19
+    # optimization rounds restructured; every one of them took a green
+    # r19 driver row (CORRECTNESS_r19.json) on a tree carrying those
+    # diffs.  Entries stay only while tools/changed_gates.py finds a
+    # diff since that row: funnel, funnel6, retention, knn_pq,
+    # knn_ivfpq, knn_int8, knn_bruteforce, kmeans_train, video_frames,
+    # semantic_dedup and curation_v3 had none and are closed.
     #
-    # r18 numpy XXH64 MinHash signature kernel (28a15ba); r19
-    # additionally folds LSH band hashing into the same kernel pass
-    # (VERDICT task 2), so these carry BOTH rounds' diffs:
+    # The minhash kernel's band-check and seed edits in the tick-store
+    # read-path change (plus, for the cluster gates, duplicate_clusters
+    # reading its pair frame once) reach these:
     "dedup_minhash",
     "dedup_minhash_capped",
     "dedup_clusters",
     "dedup_clusters_capped",
     "dedup_incremental",
-    "semantic_dedup",
     "contamination_fuzzy",
-    # r18 funnel one-shuffle window stack (2309406) + retention window
-    # rewrite (28a15ba):
-    "funnel",
-    "funnel6",
-    "retention",
-    # r18 single-py4j-call vector/matrix plan literals (21cd8a8) —
-    # plan-identity proven locally, never driver-sampled (knn_bruteforce
-    # DID take a green r18 row on the changed tree; queued anyway per
-    # the verdict's explicit list):
-    "knn_pq",
-    "knn_ivfpq",
-    "knn_int8",
-    "knn_bruteforce",
-    "kmeans_train",
-    # r18 within-query persist of the muxed fixture (a479e8f):
-    "video_frames",
-    # r19 band-hash kernel fold propagation (changed_gates-derived):
-    # these three route through minhash_lsh_pairs / the minhash store
-    # builders too, and their standing exemption proof was r18's —
-    # a gate with a REAL r19 diff takes a queue slot, not a stale
-    # exemption.
     "curation_pipeline",
     "split_leakage",
     "stream_dedup_incremental",
-    # r19 curation_v3 restructure (shared line explode via cache_lines,
-    # DSIR carry_cols/keep_unscored instead of left-join + re-join +
-    # isNotNull): real plan change, oracle re-proven bit-exact locally,
-    # queued for a driver row.
-    "curation_v3",
     # Tick-store read path: every Table read takes its schema from the
     # sidecar instead of footer inference, and ohlcv(every=...) buckets
     # on epoch-nanos with bars assembled on the driver.  The full
@@ -6132,6 +6102,14 @@ _CHANGED_THIS_ROUND = [
     "ingest_json",
     "schema_evolution",
     "convert_column",
+    # One Table mode also rewrote the write() commit tail, compact()
+    # and the COW rewrites (_land_staging, _flip_replacing) under these
+    # five, whose exemptions described older r17/r18 diffs.
+    "table_delete",
+    "table_lifecycle",
+    "manifest_stress",
+    "stream_txn_stress",
+    "stream_ingest_manifest",
 ]
 
 # Rule-1 pressure valve, used ONLY when the window is over-subscribed:
@@ -6275,38 +6253,11 @@ _CHANGED_BUT_LOCALLY_PROVEN = {
     "ohlcv_gapfill": ("verbatim hoist to temporal.py:"
                       "gapfill_daily_bars; bit-exact mirror green on "
                       "the changed tree (r18)"),
-    # Round 18, manifest data skipping: commits record per-file
-    # min/max stats (metadata-only — not one data byte changes) and
-    # scan()/_rewrite_where prune by them.  Pruning is sound by
-    # construction (a skipped file's recorded range provably cannot
-    # intersect the predicate's necessary range; files without stats
-    # always survive), so every table-family gate's OUTPUT is
-    # byte-identical — re-verified bit-exact on the changed tree.
-    # The window cannot absorb six more rule-1 slots (three new gates
-    # registered this round); the two table gates the window was
-    # re-verifying anyway are QUEUED instead (rule-1 list).
-    "table_delete": ("stats capture is metadata-only; discovery "
-                     "pruning sound (skipped files provably "
-                     "unmatched); bit-exact mirror green on the "
-                     "changed tree (r18)"),
-    "table_lifecycle": ("same data-skipping diff — compact/vacuum "
-                        "carry stats through, scan output "
-                        "unchanged; bit-exact mirror green (r18)"),
-    "manifest_stress": ("CAS append/flip paths gain stats fields "
-                        "only; bit-exact mirror green (r18)"),
-    "stream_txn_stress": ("txn-replay commit path unchanged except "
-                          "stats ride-along; bit-exact mirror green "
-                          "(r18)"),
-    # Round 17: snapshot() refactor — the version-file loading moved
-    # verbatim into _version_files so the new changes_between CDC
-    # reader shares it; the read path is expression-identical and the
-    # gate was driver-green in r16 (age 0, outside the r17 window —
-    # queuing would evict a staler gate for a pure extract-method
-    # diff).
-    "stream_ingest_manifest": ("snapshot() extract-method refactor "
-                               "(_version_files), byte-identical "
-                               "behavior; bit-exact mirror green on "
-                               "the changed tree (r17)"),
+    # (The r17/r18 table-family entries — table_delete,
+    # table_lifecycle, manifest_stress, stream_txn_stress,
+    # stream_ingest_manifest — were removed when One Table mode changed
+    # their code paths again; a fresh diff queues a gate in
+    # _CHANGED_THIS_ROUND instead of riding an older proof.)
     "contamination_bloom": (
         "guard-only diff (raises on grouped/duplicate/oversized word "
         "tables the gate never builds); bit-exact mirror green on the "

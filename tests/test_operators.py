@@ -1972,26 +1972,94 @@ class TestSkew:
 
 
 class TestClusters:
+    @staticmethod
+    def _persistent_ids(spark):
+        m = spark.sparkContext._jsc.getPersistentRDDs()
+        return {k for k in m.keySet().toArray()}
+
     def test_checkpoint_blocks_bounded(self, spark):
         """Superseded per-round localCheckpoints must be freed as the
         loop advances: a chain graph forcing ~11 rounds may leave at
-        most the edges cache + the final checkpoint persisted (before
+        most the pair-projection cache + the final checkpoint persisted (before
         the fix, every round's checkpoint stayed pinned — measured disk
         exhaustion on the 100x pair graph)."""
-        def persistent_ids():
-            m = spark.sparkContext._jsc.getPersistentRDDs()
-            return {k for k in m.keySet().toArray()}
-
         pairs = spark.createDataFrame(
             [(f"d{i:02d}", f"d{i + 1:02d}") for i in range(12)],
             "id_a string, id_b string")
-        before = persistent_ids()
+        before = self._persistent_ids(spark)
         out = dedup.duplicate_clusters(pairs, driver_threshold=0)
         assert out.where(F.col("cluster_id") == "d00").count() == 13
-        leaked = persistent_ids() - before
+        leaked = self._persistent_ids(spark) - before
         assert len(leaked) <= 2, f"{len(leaked)} persisted RDDs leaked"
         for h in getattr(out, "_zdb_cache_handles", []):
             h.unpersist()
+
+    def test_non_convergence_releases_caches(self, spark):
+        """The RuntimeError leaves the caller no frame to release(): the
+        cached projection and the last checkpoint are freed before the
+        raise."""
+        pairs = spark.createDataFrame(
+            [(i, i + 1) for i in range(12)], "id_a long, id_b long")
+        before = self._persistent_ids(spark)
+        with pytest.raises(RuntimeError, match="did not converge"):
+            dedup.duplicate_clusters(pairs, driver_threshold=0, max_iter=1)
+        assert self._persistent_ids(spark) - before == set()
+
+    def test_near_dup_non_convergence_releases_pair_caches(self, spark):
+        # the pair frame's signature cache and persisted hot-bucket frame
+        # go too: near_dup_clusters hands them to duplicate_clusters
+        text_ = " ".join(f"w{i}" for i in range(40))
+        df = spark.createDataFrame(
+            [(1, text_), (2, text_), (3, "unrelated words only here")],
+            "doc_id long, text string")
+        before = self._persistent_ids(spark)
+        with pytest.raises(RuntimeError, match="did not converge"):
+            dedup.near_dup_clusters(df, driver_threshold=0, max_iter=1)
+        assert self._persistent_ids(spark) - before == set()
+
+    @pytest.mark.parametrize("driver_threshold", [200_000, 0],
+                             ids=["driver", "distributed"])
+    def test_pair_frame_evaluated_once(self, spark, driver_threshold):
+        """Both paths read the pair plan through one cached projection:
+        a counting UDF inside the pair frame runs once per pair row."""
+        calls = spark.sparkContext.accumulator(0)
+
+        def counted(x):
+            calls.add(1)
+            return x
+
+        tick = F.udf(counted, "long")
+        pairs = spark.range(6).select(F.col("id").alias("id_a"),
+                                      tick(F.col("id") + 100).alias("id_b"))
+        out = dedup.duplicate_clusters(pairs,
+                                       driver_threshold=driver_threshold)
+        got = {r["doc_id"]: r["cluster_id"] for r in out.collect()}
+        assert got == {**{i: i for i in range(6)},
+                       **{i + 100: i for i in range(6)}}
+        assert calls.value == 6
+        dedup.release(out)
+
+    @pytest.mark.parametrize("make,id_type,nullable", [
+        (lambda s: s.createDataFrame([(1, 2), (2, 3)],
+                                     "id_a long, id_b long"),
+         "bigint", True),
+        (lambda s: s.createDataFrame([("x", "y")],
+                                     "id_a string, id_b string"),
+         "string", True),
+        (lambda s: s.createDataFrame([], "id_a long, id_b long"),
+         "bigint", True),
+        (lambda s: s.range(3).select(F.col("id").alias("id_a"),
+                                     (F.col("id") + 10).alias("id_b")),
+         "bigint", False),
+    ], ids=["long", "string", "empty", "not_null"])
+    def test_driver_path_schema(self, spark, make, id_type, nullable):
+        # the union-widened id type, nullable as the pair columns are
+        out = dedup.duplicate_clusters(make(spark))
+        assert out._zdb_rounds == 0
+        assert out.schema.simpleString() == (
+            f"struct<doc_id:{id_type},cluster_id:{id_type}>")
+        assert [f.nullable for f in out.schema] == [nullable, nullable]
+        dedup.release(out)
 
     def test_components_exact(self, spark):
         pairs = spark.createDataFrame(

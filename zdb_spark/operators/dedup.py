@@ -19,7 +19,10 @@ Four families, cheapest first:
    operators.similarity).
 
 Scale notes: every operator is expressed as DataFrame ops (shuffle-by-key,
-no driver collects, no Python in the hot path).  The LSH joins are
+no Python in the hot path).  The one collect of data rows to the driver
+is ``duplicate_clusters``' small-graph union-find, bounded by its
+``driver_threshold`` pair rows; larger pair graphs stay distributed
+(min-label propagation).  The LSH joins are
 self-equi-joins whose key cardinality grows with corpus size, so AQE
 handles skew; extremely hot buckets (boilerplate docs) are bounded by the
 ``max_bucket_size`` option on ``minhash_lsh_pairs`` /
@@ -796,38 +799,52 @@ def duplicate_clusters(pairs: DataFrame, id_a: str = "id_a",
     actionable keep/drop decision (keep ``doc_id == cluster_id``, the
     minimum member).
 
+    The pair frame is evaluated ONCE: its ``(a, b)`` projection is the
+    operator's single cache, and both paths read only that cache, so
+    the candidate join and verify behind ``pairs`` never run twice.
     Two physical paths behind one contract (cluster_id = min member id):
 
-    - **Small graphs** (≤ ``driver_threshold`` directed edges, counted on
-      the already-cached edge frame): collect and union-find on the
-      driver.  A 500-pair graph should not pay multi-round join+
-      checkpoint fixed costs (measured ~5 s of overhead for ~0.1 s of
-      work); the collect is bounded by the threshold (~MBs), the same
-      bounded-driver-step pattern as IVF's sample-trained centroids.
-      Pass ``driver_threshold=0`` to force the distributed path (the
-      scale probe does, so its curve measures the path a 100 TB pair
-      graph takes).
-    - **Large graphs**: iterative min-label propagation — each round
-      every node takes the min of its own label and its neighbors';
-      converges in ≤ graph-diameter rounds (near-dup clusters are
-      shallow — template groups are nearly cliques, diameter ~2).  The
-      driver loop carries only a convergence COUNT per round; labels
-      stay distributed, and each round is one small-key join + groupBy
-      on the PAIR set (≪ corpus).  This is an inherently iterative
-      algorithm — the pattern for everything Catalyst can't express in
-      one plan (cf. SURVEY §2.7 delegated surface).
+    - **Small graphs** (≤ ``driver_threshold`` PAIR ROWS, sized by a
+      ``limit(driver_threshold + 1)`` collect of the projection):
+      union-find on the driver.  A 500-pair graph should not pay
+      multi-round join+checkpoint fixed costs (measured ~5 s of
+      overhead for ~0.1 s of work); the collect is bounded by the
+      threshold (~MBs), the same bounded-driver-step pattern as IVF's
+      sample-trained centroids.  The labels come back as a
+      pandas-built frame, so with Arrow on, reading them runs no
+      Python worker.  Pass ``driver_threshold=0`` to force the
+      distributed path (the scale probe does, so its curve measures
+      the path a 100 TB pair graph takes).
+    - **Large graphs**: iterative min-label propagation over the
+      directed edges (the projection plus its swap, duplicates kept:
+      a min ignores them) — each round every node takes the min of
+      its own label and its neighbors'; converges in ≤ graph-diameter
+      rounds (near-dup clusters are shallow — template groups are
+      nearly cliques, diameter ~2).  The driver loop carries only a
+      convergence COUNT per round; labels stay distributed, and each
+      round is one small-key join + groupBy on the PAIR set (≪
+      corpus).  This is an inherently iterative algorithm — the
+      pattern for everything Catalyst can't express in one plan (cf.
+      SURVEY §2.7 delegated surface).
+
+    ``release(result)`` frees the projection and the caches ``pairs``
+    carried; on non-convergence they are freed before the raise.
     """
-    edges = (pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
-             .unionByName(pairs.select(F.col(id_b).alias("a"),
-                                       F.col(id_a).alias("b")))
-             .distinct().cache())
+    ab = (pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
+          .cache())
+    handles = [ab, *getattr(pairs, "_zdb_cache_handles", [])]
+    # directed edges: the projection plus its swap
+    edges = ab.unionByName(ab.select(F.col("b").alias("a"),
+                                     F.col("a").alias("b")))
 
     if driver_threshold > 0:
         # limit+1 collect sizes the graph without a full count; if it
-        # comes back under the threshold we already hold the whole edge
-        # set and union-find it on the driver (bounded: threshold rows)
-        erows = edges.limit(driver_threshold + 1).collect()
-        if len(erows) <= driver_threshold:
+        # comes back under the threshold we already hold every pair and
+        # union-find it on the driver (bounded: threshold rows)
+        prows = ab.limit(driver_threshold + 1).collect()
+        if len(prows) <= driver_threshold:
+            import pandas as pd
+
             parent: dict = {}
 
             def find(x):
@@ -838,8 +855,7 @@ def duplicate_clusters(pairs: DataFrame, id_a: str = "id_a",
                     parent[x], x = r, parent[x]
                 return r
 
-            for r in erows:
-                a, b = r["a"], r["b"]
+            for a, b in prows:
                 parent.setdefault(a, a)
                 parent.setdefault(b, b)
                 ra, rb = find(a), find(b)
@@ -847,13 +863,15 @@ def duplicate_clusters(pairs: DataFrame, id_a: str = "id_a",
                     # min-id root keeps the public contract exact
                     lo, hi = (ra, rb) if ra < rb else (rb, ra)
                     parent[hi] = lo
-            out_rows = [(n, find(n)) for n in parent]
-            spark = pairs.sparkSession
+            nodes = list(parent)
+            # ids keep the edges' union-widened type and nullability
             schema = edges.select(F.col("a").alias("doc_id"),
                                   F.col("a").alias("cluster_id")).schema
-            out = spark.createDataFrame(out_rows, schema)
-            out._zdb_cache_handles = [
-                edges, *getattr(pairs, "_zdb_cache_handles", [])]
+            out = pairs.sparkSession.createDataFrame(
+                pd.DataFrame({"doc_id": nodes,
+                              "cluster_id": [find(n) for n in nodes]}),
+                schema)
+            out._zdb_cache_handles = handles
             out._zdb_rounds = 0  # driver union-find path
             return out
     # localCheckpoint (not cache) each round: caching truncates
@@ -900,14 +918,17 @@ def duplicate_clusters(pairs: DataFrame, id_a: str = "id_a",
             break
     if not converged:
         # Falling through silently would return SPLIT components — wrong
-        # cluster ids with no signal.  Loud beats wrong.
+        # cluster ids with no signal.  Loud beats wrong.  The caller
+        # gets no frame to release(), so free the caches here.
+        _unpersist_checkpoint(ckpt)
+        for h in handles:
+            h.unpersist()
         raise RuntimeError(
             f"duplicate_clusters did not converge in {max_iter} rounds "
             "(component diameter exceeds max_iter); raise max_iter")
     out = labels.select(F.col("node").alias("doc_id"),
                         F.col("lbl").alias("cluster_id"))
-    out._zdb_cache_handles = [edges,
-                              *getattr(pairs, "_zdb_cache_handles", [])]
+    out._zdb_cache_handles = handles
     # rounds-to-convergence == observed component diameter bound; the
     # scale probe records this so SCALE.md can show the iteration count
     # stays flat (~diameter 2-3 for template groups) as the corpus grows.
