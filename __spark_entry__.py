@@ -6110,6 +6110,12 @@ _CHANGED_THIS_ROUND = [
     "manifest_stress",
     "stream_txn_stress",
     "stream_ingest_manifest",
+    # Chart reads in one Spark job: Table.scan builds one SQL-text
+    # predicate and projection, symbols() and ohlcv(every=...) run in
+    # one task under _ONE_TASK_BYTES.  server_ohlcv and the gates above
+    # that call Table.scan are already queued; this one reads through
+    # read_rollup's scan.
+    "rollup_maintain",
 ]
 
 # Rule-1 pressure valve, used ONLY when the window is over-subscribed:

@@ -37,3 +37,36 @@ def sf_dir() -> str:
 def tmp_home(tmp_path):
     """Isolated ZDB_SPARK_HOME per test."""
     return str(tmp_path / "zdb_home")
+
+
+@pytest.fixture()
+def run_counted(spark, monkeypatch):
+    """``run_counted(fn)`` -> ``(fn(), jobs, plans)``: the Spark jobs
+    ``fn`` launched (one job group, read once the listener bus drained)
+    and the executed plan of every frame it collected."""
+    import uuid
+
+    sc = spark.sparkContext
+    frame = type(spark.range(1))  # the concrete classic DataFrame
+    plans: list[str] = []
+    collect = frame.collect
+
+    def recording(self):
+        rows = collect(self)
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return rows
+
+    monkeypatch.setattr(frame, "collect", recording)
+
+    def run(fn):
+        group = f"counted-{uuid.uuid4().hex}"
+        plans.clear()
+        sc.setJobGroup(group, "counted")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group)), \
+            list(plans)
+    return run

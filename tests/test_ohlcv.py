@@ -193,6 +193,68 @@ class TestDriverAssembly:
                                       T0 + 40 * MIN, every=every)
 
 
+class TestReadPlan:
+    """A small read runs as ONE Spark job: under ``_ONE_TASK_BYTES`` the
+    scan is coalesced to one partition, so the bucket aggregate needs no
+    exchange (and AQE no separate shuffle-map job)."""
+
+    @pytest.mark.parametrize("every", ["5m", None])
+    def test_one_job_no_exchange(self, bar_table, run_counted, every):
+        got, jobs, plans = run_counted(
+            lambda: ohlcv(bar_table, T0, T0 + 10 * MIN, every=every))
+        assert jobs == 1
+        assert len(plans) == 1 and "Exchange" not in plans[0]
+        assert set(got["results"]) == {"AAPL", "MSFT"}
+
+    def test_exchange_above_cutoff_same_bars(self, bar_table, run_counted,
+                                             monkeypatch):
+        small, _, _ = run_counted(
+            lambda: ohlcv(bar_table, T0, T0 + 10 * MIN, every="2m"))
+        monkeypatch.setattr(Table, "_ONE_TASK_BYTES", 0)
+        big, _, plans = run_counted(
+            lambda: ohlcv(bar_table, T0, T0 + 10 * MIN, every="2m"))
+        assert "Exchange" in plans[0]
+        assert big == small
+        assert small["results"]["AAPL"]["t"] == [T0, T0 + 2 * MIN]
+
+
+# symbols that would break out of a quoted SQL string literal
+HOSTILE = ["O'NEIL", "A\\B", "X') OR ('1'='1"]
+
+
+@pytest.fixture()
+def hostile_table(spark, tmp_home):
+    t = Table.create(spark, bar_schema("hostile"), home=tmp_home)
+    t.write(spark.createDataFrame(
+        [Row(ts=T0 + i * MIN, sym=sym, open=1.0 + i, high=2.0 + i,
+             low=0.5 + i, close=1.5 + i, volume=i + 1)
+         for i in range(3) for sym in ["AAPL", "1", *HOSTILE]]))
+    return t
+
+
+class TestSymbolText:
+    """Requested symbols reach the plan as Column values, never as SQL
+    text: quotes, backslashes and an OR-injection select exactly their
+    own rows."""
+
+    @pytest.mark.parametrize("every", [None, "2m"])
+    def test_hostile_symbols_select_exactly_themselves(self, hostile_table,
+                                                       every):
+        got = ohlcv(hostile_table, T0, T0 + 10 * MIN, HOSTILE, every=every)
+        assert sorted(got["results"]) == sorted(HOSTILE)
+        want = ohlcv(hostile_table, T0, T0 + 10 * MIN, every=every)
+        assert got["results"] == {s: want["results"][s] for s in HOSTILE}
+
+    @pytest.mark.parametrize("every", [None, "2m"])
+    def test_absent_hostile_symbol_selects_nothing(self, hostile_table,
+                                                   every):
+        got = ohlcv(hostile_table, T0, T0 + 10 * MIN,
+                    ["Z') OR ('1'='1", "O'NEIL' OR '1'='1"], every=every)
+        assert got == {"results": {}, "min_date": None, "max_date": None}
+        assert ohlcv_frame(hostile_table, T0, T0 + 10 * MIN,
+                           ["' OR 1=1 --"]).count() == 0
+
+
 class TestResample:
     def test_bars_to_coarser_bars(self, bar_table):
         out = (resample(bar_table.scan(), "2 minutes")

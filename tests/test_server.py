@@ -5,6 +5,7 @@ Python scan body, and the 400 error style."""
 import json
 import threading
 import urllib.error
+import urllib.parse
 import urllib.request
 
 import pytest
@@ -19,24 +20,32 @@ NS = 1_000_000_000
 MIN = 60 * NS
 T0 = 1704067200 * NS
 PORT = 17979
+HOSTILE = ["O'NEIL", "A\\B", "X') OR ('1'='1"]
 
 
 @pytest.fixture(scope="module")
 def server(spark, tmp_path_factory):
     home = str(tmp_path_factory.mktemp("srv_home"))
-    schema = (Schema("bars")
-              .add_col("sym", ColumnType.SYMBOL16)
-              .add_col("open", ColumnType.F64)
-              .add_col("high", ColumnType.F64)
-              .add_col("low", ColumnType.F64)
-              .add_col("close", ColumnType.F64)
-              .add_col("volume", ColumnType.U64)
-              .with_partition_by(PartitionBy.DAY))
-    t = Table.create(spark, schema, home=home)
+
+    def schema(name):
+        return (Schema(name)
+                .add_col("sym", ColumnType.SYMBOL16)
+                .add_col("open", ColumnType.F64)
+                .add_col("high", ColumnType.F64)
+                .add_col("low", ColumnType.F64)
+                .add_col("close", ColumnType.F64)
+                .add_col("volume", ColumnType.U64)
+                .with_partition_by(PartitionBy.DAY))
+    t = Table.create(spark, schema("bars"), home=home)
     rows = [Row(ts=T0 + i * MIN, sym=s, open=100.0 + i, high=101.0 + i,
                 low=99.0 + i, close=100.5 + i, volume=10 + i)
             for i in range(5) for s in ("AAPL", "MSFT")]
     t.write(spark.createDataFrame(rows))
+    # a second table whose symbols would break out of SQL string text
+    q = Table.create(spark, schema("quotes"), home=home)
+    q.write(spark.createDataFrame(
+        [r.asDict() | {"sym": s} for r in rows[::2]
+         for s in ("AAPL", *HOSTILE)]))
     srv = make_server(spark, home=home, port=PORT)
     th = threading.Thread(target=srv.serve_forever, daemon=True)
     th.start()
@@ -108,6 +117,22 @@ class TestEndpoints:
         out = json.loads(get(
             f"{server}/ohlcv/bars/2024-01-01/2024-01-02").read())
         assert len(out["results"]) == 2
+
+    @pytest.mark.parametrize("every", ["", "&every=2m"])
+    def test_ohlcv_hostile_symbols_stay_values(self, server, every):
+        """?symbols= reaches the plan as Column values, never SQL text:
+        each hostile symbol selects exactly its own rows."""
+        def fetch(syms):
+            return json.loads(get(
+                f"{server}/ohlcv/quotes/{T0}/{T0 + 10 * MIN}?symbols="
+                + urllib.parse.quote(",".join(syms)) + every).read())
+
+        got = fetch(HOSTILE)
+        assert sorted(got["results"]) == sorted(HOSTILE)
+        aapl = fetch(["AAPL"])["results"]["AAPL"]
+        assert all(b == aapl for b in got["results"].values())
+        assert fetch(["Z') OR ('1'='1", "AAPL' OR '1'='1"]) == {
+            "results": {}, "min_date": None, "max_date": None}
 
     def test_q_python_scan(self, server):
         body = json.dumps({

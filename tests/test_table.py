@@ -809,6 +809,42 @@ class TestReadSchema:
         assert list(sc.statusTracker().getJobIdsForGroup(
             "zdb-read-plan")) == []
 
+    @pytest.mark.parametrize("evolved", [False, True])
+    def test_fused_predicate_keeps_pruning(self, spark, tmp_home, evolved):
+        """scan's one SQL-text ``where`` still lands as PartitionFilters
+        on dt and PushedFilters on ts, and optimizes to the same plan
+        as the four chained Column ``where``s it replaced."""
+        import re
+
+        from zdb_spark.table import _dt_str_for
+
+        t = Table.create(spark, make_schema(), home=tmp_home)
+        t.write(rows_df(spark, [T0 + i * DAY for i in range(5)]))
+        if evolved:
+            t.add_column("venue", ColumnType.SYMBOL8, default="UNK")
+        lo, hi = T0 + DAY, T0 + 2 * DAY + 1
+        cols = ["ts", "price", *(["venue"] if evolved else [])]
+        got = t.scan(lo, hi, cols)
+        node = next(ln for ln in got._jdf.queryExecution().executedPlan()
+                    .toString().splitlines() if "FileScan" in ln)
+        assert re.search(r"PartitionFilters: \[[^]]*dt#", node), node
+        assert re.search(r"PushedFilters: \[[^]]*\(ts,", node), node
+        day = "yyyy-MM-dd"
+        old = (t._read(t._pruned_files(lo, hi))
+               .where(F.col("ts") >= F.lit(lo))
+               .where(F.col("dt") >= F.lit(_dt_str_for(lo, day)))
+               .where(F.col("ts") <= F.lit(hi))
+               .where(F.col("dt") <= F.lit(_dt_str_for(hi, day)))
+               .select(*cols))
+
+        def optimized(df):
+            return re.sub(r"#\d+", "#", df._jdf.queryExecution()
+                          .optimizedPlan().toString())
+
+        assert optimized(got) == optimized(old)
+        assert sorted(got.collect()) == sorted(old.collect())
+        assert len(got.collect()) == 2
+
     @pytest.mark.parametrize("fresh", [True, False])
     def test_evolved_schema_unchanged(self, spark, tmp_home, fresh):
         """Evolved tables read ``dt`` as a STRING and a defaulted added
@@ -1050,6 +1086,24 @@ class TestSymbols:
         codes = t.symbol_codes("sym")
         assert codes == {0: None, 1: "AAPL", 2: "GOOG", 3: "MSFT"}
         assert min(c for c in codes if codes[c] is not None) == 1
+
+    def test_small_table_one_job_no_exchange(self, spark, tmp_home,
+                                             run_counted, monkeypatch):
+        """Under ``_ONE_TASK_BYTES`` the distinct runs in one task: one
+        Spark job, no exchange; above it the exchange comes back with
+        the same answer."""
+        t = Table.create(spark, make_schema(), home=tmp_home)
+        for i, sym in enumerate(["MSFT", "AAPL", "IBM"]):
+            t.write(rows_df(spark, [T0 + i * DAY, T0 + i * DAY + 1],
+                            sym=sym))
+        got, jobs, plans = run_counted(lambda: t.symbols("sym"))
+        assert got == ["AAPL", "IBM", "MSFT"]
+        assert jobs == 1
+        assert len(plans) == 1 and "Exchange" not in plans[0]
+        monkeypatch.setattr(Table, "_ONE_TASK_BYTES", 0)
+        again, _, plans = run_counted(lambda: t.symbols("sym"))
+        assert "Exchange" in plans[0]
+        assert again == got
 
 
 class TestChunkedManifest:
@@ -2045,7 +2099,7 @@ class TestFileStats:
         for d in range(4):
             t.write(rows_df(spark, [T0 + d * DAY], price=float(d)))
         full = t.df()
-        pruned = t._df_pruned((T0 + DAY, T0 + 2 * DAY))
+        pruned = t._read(t._pruned_files(T0 + DAY, T0 + 2 * DAY))
         assert len(full.inputFiles()) == 4
         assert len(pruned.inputFiles()) == 2
         # values identical to the unpruned filtered scan
@@ -2135,7 +2189,7 @@ class TestFileStats:
         with open(p, "w") as fh:
             _json.dump(doc, fh)
         t2 = Table.open(spark, "tfs", home=tmp_home)
-        assert len(t2._df_pruned((T0, T0)).inputFiles()) == 2
+        assert len(t2._read(t2._pruned_files(T0, T0)).inputFiles()) == 2
         assert t2.scan(T0, T0).count() == 1
 
 

@@ -22,7 +22,11 @@ judge did by hand, at FUNCTION granularity:
    it calls) references an affected name;
 4. the affected set is compared against ``_CHANGED_THIS_ROUND``;
    missing gates exit non-zero.  Gates with no CORRECTNESS history are
-   exempt (rotation rule 2 auto-prioritizes them).
+   exempt (rotation rule 2 auto-prioritizes them);
+5. queued entries that took a green row in the newest
+   ``CORRECTNESS_r*.json`` and that the diff since ``ref`` does not
+   reach print as ``closable`` (default ref only): their change is
+   verified, so the entry can leave the queue (otherwise it only grows).
 
 Name-based propagation over-approximates on shared method names —
 acceptable: a false "queue me" costs one window slot, a false "all
@@ -278,6 +282,19 @@ def boundary_exempt(first_round: dict[str, int], max_round: int,
     return {g for g, r in first_round.items() if r == max_round}
 
 
+def closable(queued: list[str], affected: dict[str, str]) -> list[str]:
+    """Queued gates green in the newest ``CORRECTNESS_r*.json`` whose
+    code the diff since ``ref`` does not reach."""
+    files = {int(m.group(1)): f for f in os.listdir(REPO)
+             if (m := re.fullmatch(r"CORRECTNESS_r(\d+)\.json", f))}
+    if not files:
+        return []
+    rows = json.load(open(os.path.join(REPO, files[max(files)])))
+    return sorted(g for g in queued if g not in affected and all(
+        rows.get(g, {}).get(k) for k in
+        ("rows_match", "schema_match", "hash_match")))
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--ref", default=None)
@@ -295,7 +312,9 @@ def main() -> int:
     import __spark_entry__ as entry
     exempt = dict(getattr(entry, "_CHANGED_BUT_LOCALLY_PROVEN", {}))
     missing = sorted(set(affected) - queued - brand_new - set(exempt))
-    extra = sorted(queued - set(affected) - brand_new)
+    # "no diff since the green row" only holds against the default ref
+    done = [] if args.ref else closable(entry._CHANGED_THIS_ROUND, affected)
+    extra = sorted(queued - set(affected) - brand_new - set(done))
 
     if not args.quiet:
         print(f"diff base: {ref[:12]}")
@@ -308,6 +327,9 @@ def main() -> int:
         if extra:
             print(f"queued but not derivably affected (fine, e.g. "
                   f"oracle-SQL-only edits): {extra}")
+        if done:
+            print(f"closable (green in the newest CORRECTNESS_r*.json, "
+                  f"no diff since): {done}")
     if missing:
         print(f"MISSING from _CHANGED_THIS_ROUND: {missing}",
               file=sys.stderr)

@@ -23,6 +23,9 @@ Scale notes:
   epoch-nanos themselves (``ts - pmod(ts, every_ns)``), and the
   per-symbol arrays are built on the driver from the collected long-form
   rows — the same bars a grouping shuffle would have shipped there.
+  Under ``Table._ONE_TASK_BYTES`` of input it is one task, no exchange.
+  Bounds, bucket and aggregates are SQL text over validated numbers and
+  quoted names only; the requested symbols stay a Column ``isin``.
 - ``first/last within bucket`` use ``min_by(open, ts)`` / ``max_by(close,
   ts)`` rather than window functions: single-pass aggregation instead of a
   sort per partition, and deterministic because (ts) is unique per (sym,
@@ -34,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .functions.scalar import nanos_to_ts, to_nanos
-from .table import Table
+from .table import Table, _sql_name
 
 __all__ = ["ohlcv_frame", "ohlcv", "resample", "parse_every",
            "duration_of_nanos", "threshold_bars"]
@@ -85,14 +88,15 @@ def ohlcv_frame(table: Table, from_ts, to_ts, symbols: list[str] | None = None,
     Mirrors A3-A7 of the endpoint (scan → isin filter → upcast volume),
     leaving grouping to the caller/serializer.
     """
-    lo, hi = to_nanos(from_ts), to_nanos(to_ts)
-    if lo > hi:  # reference swaps reversed ranges (ohlcv.rs:64-66)
-        lo, hi = hi, lo
-    cols = [table.schema.ts_col, symbol_col, *OHLCV_COLS]
-    df = table.scan(lo, hi, cols)
+    # the reference swaps reversed ranges (ohlcv.rs:64-66)
+    lo, hi = sorted((to_nanos(from_ts), to_nanos(to_ts)))
+    ts = table.schema.ts_col
+    df = table.scan(lo, hi, [ts, symbol_col, *OHLCV_COLS])
     if symbols:
-        df = df.where(F.col(symbol_col).isin(list(symbols)))
-    return df.withColumn("volume", F.col("volume").cast("long"))
+        # a Column isin: request text never reaches SQL text
+        df = df.where(df[symbol_col].isin(list(symbols)))
+    return df.selectExpr(*map(_sql_name, (ts, symbol_col, *OHLCV_COLS[:-1])),
+                         "CAST(`volume` AS BIGINT) AS `volume`")
 
 
 def _asc(v):
@@ -116,33 +120,29 @@ def ohlcv(table: Table, from_ts, to_ts, symbols: list[str] | None = None,
     over the ``(t, o, h, l, c, v)`` struct, symbols sorted with a null
     symbol first.
 
-    BOUNDED DRIVER MATERIALIZATION: this is the API endpoint — the
-    return value is a JSON-shaped dict, so every requested bar crosses
-    the driver (``collect``), like every other endpoint serializer.
-    The bound is bars-in-range × symbols-requested, which the CALLER
-    controls via [from_ts, to_ts), ``symbols``, and ``every``; a
-    chart request is a few thousand bars.  For unbounded/analytical
-    reads use ``ohlcv_frame`` — the same scan + filter as a lazy
-    DataFrame that never touches the driver.
+    BOUNDED DRIVER MATERIALIZATION: every requested bar crosses the
+    driver (``collect``), bars-in-range × symbols-requested, a bound the
+    CALLER sets with the range, ``symbols`` and ``every`` (a chart is a
+    few thousand bars).  Unbounded reads use the lazy ``ohlcv_frame``.
     """
-    ts = table.schema.ts_col
-    df = ohlcv_frame(table, from_ts, to_ts, symbols, symbol_col)
+    lo, hi = sorted((to_nanos(from_ts), to_nanos(to_ts)))
+    df = ohlcv_frame(table, lo, hi, symbols, symbol_col)
     if every is not None:
         n, unit = parse_every(every).split()
-        every_ns = int(n) * _UNIT_NS[unit]
-        bucket = F.col(ts) - F.pmod(F.col(ts), F.lit(every_ns))
-        df = df.groupBy(bucket.alias(ts), symbol_col).agg(*_ohlcv_aggs(ts))
+        ts = _sql_name(table.schema.ts_col)
+        bucket = f"{ts} - pmod({ts}, {int(n) * _UNIT_NS[unit]}) AS {ts}"
+        df = (table._one_task(df, lo, hi)
+              .groupBy(F.expr(bucket), F.expr(_sql_name(symbol_col)))
+              .agg(*_ohlcv_aggs(table.schema.ts_col)))
     bars: dict = {}
-    for r in df.select(ts, symbol_col, *OHLCV_COLS).collect():
+    for r in df.collect():
         bars.setdefault(r[1], []).append((r[0], *r[2:]))
     results: dict[str, dict[str, list]] = {}
     for sym in sorted(bars, key=_asc):
         cols = zip(*sorted(bars[sym], key=lambda b: tuple(map(_asc, b))))
         results[sym] = dict(zip("tohlcv", map(list, cols)))
-    # min_date/max_date are i64 epoch nanos, matching the reference's
-    # OHLCVsResponse struct exactly (ohlcv.rs:40-45) — the bundled UI
-    # (frontend.py drawChart) also scales them as nanos; a date string
-    # here broke both parity and the chart's x-axis.
+    # i64 epoch nanos, as the reference's OHLCVsResponse (ohlcv.rs:40-45)
+    # and the bundled UI (frontend.py drawChart) read them
     return {
         "results": results,
         "min_date": min((b["t"][0] for b in results.values()), default=None),
@@ -215,14 +215,14 @@ def _ohlcv_aggs(ts_col: str, price_col: str | None = None,
     bucket, high/low the max/min, volume summed.  Raw ticks read every
     field from ``price_col``; stored bars (``price_col`` None)
     re-aggregate their own open/high/low/close columns."""
-    o, h, lo, c = ((price_col,) * 4 if price_col is not None
-                   else ("open", "high", "low", "close"))
-    aggs = [F.min_by(o, F.col(ts_col)).alias("open"),
-            F.max(h).alias("high"), F.min(lo).alias("low"),
-            F.max_by(c, F.col(ts_col)).alias("close")]
+    o, h, lo, c = map(_sql_name, (price_col,) * 4 if price_col is not None
+                      else ("open", "high", "low", "close"))
+    ts = _sql_name(ts_col)
+    aggs = [f"min_by({o}, {ts}) AS open", f"max({h}) AS high",
+            f"min({lo}) AS low", f"max_by({c}, {ts}) AS close"]
     if volume_col:
-        aggs.append(F.sum(volume_col).alias("volume"))
-    return aggs
+        aggs.append(f"sum({_sql_name(volume_col)}) AS volume")
+    return [F.expr(a) for a in aggs]
 
 
 # threshold_bars moved to operators/temporal.py in r18 (hoisted for

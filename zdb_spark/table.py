@@ -315,10 +315,13 @@ class Table:
             return df.withColumn("dt", F.lit("all"))
         return df.withColumn("dt", F.date_format(ts_utc, fmt))
 
-    # Catalyst size estimate under which ONE sorted task writes an append:
-    # on a 4-vCPU host the range path kept one file per dt for a 40k-tick
-    # day (estimate 3.04 MB) and split a 45k one (3.42 MB), at AQE's 1 MB
+    # Input size under which ONE task does the work (4-vCPU host).  write:
+    # the range path kept one file per dt for a 40k-tick day (Catalyst
+    # estimate 3.04 MB) and split a 45k one (3.42 MB), at AQE's 1 MB
     # minimum partition size, which does not depend on the core count.
+    # _one_task reads, 5m ohlcv of 4 symbols, exchange/one task: 0.42 MB
+    # 288/229 ms, 1.26 MB 237/198, 2.95 MB 278/281, 5.88 MB 317/360,
+    # 11.8 MB 356/500 (all 500 symbols: SCALE.md).
     _ONE_TASK_BYTES = 3 * 1024 * 1024
 
     def write(self, df: DataFrame, enforce_order: bool = True,
@@ -1990,8 +1993,6 @@ class Table:
         files written BEFORE a column was added lack it, footer
         inference would miss it or depend on which file Spark sampled,
         and a dropped column stays projected away."""
-        from pyspark.sql import types as T
-
         p = os.path.join(self.path, "parquet")
         if not files:
             return self.spark.createDataFrame(
@@ -2014,21 +2015,23 @@ class Table:
     def df(self) -> DataFrame:
         return self._read(self._latest_manifest()[1])
 
-    def _df_pruned(self, ts_bounds: tuple | None) -> DataFrame:
-        """Snapshot DataFrame with manifest-level data skipping (r18):
-        ``ts_bounds=(lo, hi)`` (either end None-able, nanos,
-        inclusive) prunes the FILE LIST itself by the per-file stats
-        every commit records — Spark then never even opens a footer
-        for a file outside the range.  Falls back to ``df()`` when
-        there is nothing to prune with; the caller must still apply the
-        row-level predicate (stats pruning is file-granular)."""
-        lo, hi = ts_bounds if ts_bounds is not None else (None, None)
-        if lo is None and hi is None:
-            return self.df()
+    def _pruned_files(self, lo: int | None, hi: int | None) -> list[str]:
+        """The latest snapshot's files that may hold a row in the inclusive
+        nanos range ``[lo, hi]`` (either end None), by the per-file ts
+        stats every commit records; the caller still filters rows."""
         _, head = self._latest_head()
-        return self._read(self._prune_files_by_stats(
+        return self._prune_files_by_stats(
             self._files_of_head(head), self._stats_of_head(head),
-            {self.schema.ts_col: (lo, hi)}))
+            {self.schema.ts_col: (lo, hi)})
+
+    def _one_task(self, df: DataFrame, lo: int | None = None,
+                  hi: int | None = None) -> DataFrame:
+        """``df``, a plan over ``scan(lo, hi)``, in ONE partition when the
+        scan's files total under ``_ONE_TASK_BYTES`` (local FS sizes, no
+        job): an aggregate above then needs no exchange."""
+        size = sum(os.path.getsize(os.path.join(self.path, "parquet", f))
+                   for f in self._pruned_files(lo, hi))
+        return df.coalesce(1) if size < self._ONE_TASK_BYTES else df
 
     def add_column(self, name: str, col_type: ColumnType,
                    default=None) -> None:
@@ -2208,40 +2211,32 @@ class Table:
         logical predicate lands on BOTH ``dt`` (directory pruning) and
         ``ts`` (row-group pruning).  Bounds accept the API-boundary time
         forms (`functions.scalar.to_nanos`): epoch-nanos ints, raw-nanos /
-        RFC3339 / ``YYYY-MM-DD`` strings, datetimes, and dates.
+        RFC3339 / ``YYYY-MM-DD`` strings, datetimes, and dates.  The
+        range is ONE SQL-text ``where`` over validated values only.
         """
         from .functions.scalar import to_nanos
 
-        ts = self.schema.ts_col
         fmt = self.schema.partition_by.date_format
-        if from_ts is not None:
-            from_ts = to_nanos(from_ts)
-        if to_ts is not None:
-            to_ts = to_nanos(to_ts)
+        lo = None if from_ts is None else int(to_nanos(from_ts))
+        hi = None if to_ts is None else int(to_nanos(to_ts))
+        # unknown columns raise, mirroring get_union's panic (the
+        # reference's src/table/scan.rs:43-59)
+        cols = [c.name for c in self.schema.columns] if columns is None \
+            else [self.schema.column(c).name for c in columns]
         # TRIPLE predicate landing (r18): the manifest's per-file stats
         # prune the file LIST, dt prunes directories, ts prunes row
         # groups — the same logical range expressed at every metadata
         # granularity the storage offers.
-        df = self._df_pruned((from_ts, to_ts))
-        if from_ts is not None:
-            df = df.where(F.col(ts) >= F.lit(from_ts))
-            if fmt is not None:
-                dt_lo = _dt_str_for(from_ts, fmt)
-                df = df.where(F.col("dt") >= F.lit(dt_lo))
-        if to_ts is not None:
-            df = df.where(F.col(ts) <= F.lit(to_ts))
-            if fmt is not None:
-                dt_hi = _dt_str_for(to_ts, fmt)
-                df = df.where(F.col("dt") <= F.lit(dt_hi))
-        if columns is not None:
-            # unknown columns raise, mirroring get_union's panic
-            # (/root/reference/src/table/scan.rs:43-59)
-            for c in columns:
-                self.schema.column(c)
-            df = df.select(*columns)
-        else:
-            df = df.select(*[c.name for c in self.schema.columns])
-        return df
+        df = self._read(self._pruned_files(lo, hi))
+        conds = []
+        for bound, op in ((lo, ">="), (hi, "<=")):
+            if bound is not None:
+                conds.append(f"{_sql_name(self.schema.ts_col)} {op} {bound}")
+                if fmt is not None:
+                    conds.append(f"`dt` {op} '{_dt_str_for(bound, fmt)}'")
+        if conds:
+            df = df.where(" AND ".join(conds))
+        return df.selectExpr(*map(_sql_name, cols))
 
     def resample(self, from_ts: int | None = None, to_ts: int | None = None,
                  every: str | None = None, **kwargs) -> DataFrame:
@@ -2352,13 +2347,13 @@ class Table:
         dictionary-encoded pages, cheap relative to the data.  Deliberate
         divergence: sorted order is deterministic across partitions/rounds,
         insertion order isn't even defined under parallel ingest."""
-        col = self.schema.column(column)
-        if not col.is_symbol:
+        if not self.schema.column(column).is_symbol:
             raise ValueError(f"column {column!r} is not a symbol column")
         # sorted on the driver (the distinct set is small), nulls first
         # as an ascending orderBy puts them: a Spark sort would pay a
         # range-sampling job and a second shuffle for a few KB of names
-        rows = self.df().select(column).distinct().collect()
+        rows = self._one_task(self.df().selectExpr(_sql_name(column))) \
+            .distinct().collect()
         return sorted((r[0] for r in rows),
                       key=lambda s: (s is not None, s or ""))
 
@@ -2419,6 +2414,11 @@ def _validate_default(name: str, col_type: ColumnType, default) -> None:
             raise ValueError(
                 f"default {default} overflows {col_type.value} "
                 f"column {name!r} (range [{lo}, {hi}])")
+
+
+def _sql_name(name: str) -> str:
+    """A column name as a SQL identifier (backquoted)."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def _dt_str_for(ts_nanos: int, fmt: str) -> str:
