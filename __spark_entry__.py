@@ -6116,6 +6116,9 @@ _CHANGED_THIS_ROUND = [
     # that call Table.scan are already queued; this one reads through
     # read_rollup's scan.
     "rollup_maintain",
+    # One publish protocol (zdb_spark/store.py): build_ivfpq_index's
+    # full-rebuild reset now also clears store.py generation dirs.
+    "knn_ivfpq",
 ]
 
 # Rule-1 pressure valve, used ONLY when the window is over-subscribed:

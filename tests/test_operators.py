@@ -711,7 +711,7 @@ class TestSimilarity:
             0, os.path.join(path, "data"))
         similarity.compact_ann_index(spark, path)
         g, d = similarity.current_generation(path)
-        assert g == 1 and d.endswith("data-g1")
+        assert g == 1 and os.path.basename(d).startswith("gen=1.")
         # previous generation kept for the grace cycle
         assert os.path.isdir(os.path.join(path, "data"))
         got = [(r["vec_id"], round(r["cosine_sim"], 9)) for r in
@@ -723,30 +723,68 @@ class TestSimilarity:
         similarity.compact_ann_index(spark, path)
         assert similarity.current_generation(path)[0] == 2
         assert not os.path.isdir(os.path.join(path, "data"))
-        assert os.path.isdir(os.path.join(path, "data-g1"))
+        assert os.path.isdir(d)
         got = [(r["vec_id"], round(r["cosine_sim"], 9)) for r in
                similarity.lsh_index_topk(spark, path, qv, k=5).collect()]
         assert got == want
 
     def test_compact_cas_loser_cleans_up(self, emb, tmp_path, monkeypatch):
-        """A compactor that loses the generation CAS discards its output
-        and raises; the index stays on the winner's generation."""
+        """A compactor that loses the generation CAS (store.py) discards
+        its output and raises OSError; the index stays on the winner's
+        generation, and a rebuild clears every generation."""
+        import os
+
+        from zdb_spark import store
+
         spark = emb.sparkSession
         path = str(tmp_path / "cas")
         similarity.build_lsh_index(emb, path, num_bits=6, num_tables=4,
                                    dim=16)
-        # the CAS primitive itself: second publisher of a generation loses
-        assert similarity._publish_generation(path, 7, "data-g7") is True
-        assert similarity._publish_generation(path, 7, "other") is False
-        similarity._reset_generations(path)
-
-        monkeypatch.setattr(similarity, "_publish_generation",
-                            lambda *a, **k: False)
-        import os
-        with pytest.raises(RuntimeError, match="concurrent compaction"):
+        monkeypatch.setattr(store, "publish_version", lambda *a: False)
+        with pytest.raises(OSError, match="concurrent writer"):
             similarity.compact_ann_index(spark, path)
-        assert not os.path.isdir(os.path.join(path, "data-g1"))
+        monkeypatch.undo()
+        assert sorted(os.listdir(path)) == ["_meta", "data"]
         assert similarity.current_generation(path)[0] == 0
+        similarity.compact_ann_index(spark, path)
+        assert similarity.current_generation(path)[0] == 1
+        similarity.build_lsh_index(emb, path, num_bits=6, num_tables=4,
+                                   dim=16)
+        assert similarity.current_generation(path) == (
+            0, os.path.join(path, "data"))
+
+    def test_parent_built_generation_still_resolves(self, emb, tmp_path):
+        """An index compacted before store.py names its generation
+        ``data-g<N>`` behind the same pointer doc; it resolves, and the
+        next compaction vacuums the generations before the previous."""
+        import json
+        import os
+        import shutil
+
+        spark = emb.sparkSession
+        qv = emb.where(F.col("vec_id") == 0).collect()[0]["embedding"]
+        path = str(tmp_path / "old")
+        similarity.build_lsh_index(emb, path, num_bits=6, num_tables=4,
+                                   dim=16)
+        want = [(r["vec_id"], round(r["cosine_sim"], 9)) for r in
+                similarity.lsh_index_topk(spark, path, qv, k=5).collect()]
+        shutil.copytree(os.path.join(path, "data"),
+                        os.path.join(path, "data-g1"))
+        os.makedirs(os.path.join(path, "_gen"))
+        with open(os.path.join(path, "_gen", "v000000000001.json"),
+                  "w") as f:
+            json.dump({"data_dir": "data-g1"}, f)
+        assert similarity.current_generation(path) == (
+            1, os.path.join(path, "data-g1"))
+        assert [(r["vec_id"], round(r["cosine_sim"], 9)) for r in
+                similarity.lsh_index_topk(spark, path, qv, k=5)
+                .collect()] == want
+        similarity.compact_ann_index(spark, path)
+        assert not os.path.isdir(os.path.join(path, "data"))
+        assert os.path.isdir(os.path.join(path, "data-g1"))
+        assert [(r["vec_id"], round(r["cosine_sim"], 9)) for r in
+                similarity.lsh_index_topk(spark, path, qv, k=5)
+                .collect()] == want
 
     def test_probe_during_compaction_never_mixed(self, emb, tmp_path):
         """Drive probes concurrently with a compaction flip; every probe
@@ -3856,6 +3894,33 @@ class TestTextIndexStore:
         # nothing to fold after a fresh compaction of 1 batch? two
         # batches again now (compacted + batch=2) -> folds 2
         assert compact_text_index(spark, p) == 2
+
+    def test_replay_after_compaction_is_refused(self, spark, tmp_path):
+        """A replayed epoch that a compaction already folded is refused;
+        published into the new generation, n_docs would count its
+        documents twice and every score would move."""
+        from zdb_spark.operators.search import (append_text_index,
+                                                build_text_index,
+                                                compact_text_index,
+                                                text_index_topk)
+
+        def epoch(*rows):
+            return spark.createDataFrame(list(rows),
+                                         "doc_id long, text string")
+
+        p = str(tmp_path / "idx")
+        build_text_index(epoch(), p)
+        append_text_index(epoch((1, "table scan"), (2, "fast")), p,
+                          batch_id="epoch-0")
+        append_text_index(epoch((3, "table fast")), p, batch_id="epoch-1")
+        before = [tuple(r) for r in
+                  text_index_topk(spark, p, "table", k=5).collect()]
+        assert compact_text_index(spark, p) == 3
+        append_text_index(epoch((3, "table fast")), p, batch_id="epoch-1")
+        assert [tuple(r) for r in
+                text_index_topk(spark, p, "table", k=5).collect()] == before
+        assert append_text_index(epoch((1, "table scan"), (2, "fast")), p,
+                                 batch_id="epoch-0") is False
 
     def test_delete_docs_matches_live_rescan_of_remaining(self, spark,
                                                           tmp_path):

@@ -459,6 +459,33 @@ class TestCountMinStore:
                  .collect()}
         assert after == before
 
+    def test_replay_after_compaction_is_refused(self, spark, tmp_path):
+        """A compaction's pointer records the batches it folded, so an
+        epoch replayed after the compaction does not publish again into
+        the new generation, where it would double its counts."""
+        from zdb_spark.operators.sketches import (append_countmin_store,
+                                                  build_countmin_store,
+                                                  compact_countmin_store,
+                                                  countmin_store_lookup)
+
+        def epoch(*vals):
+            return spark.createDataFrame([(v,) for v in vals], "v string")
+
+        p = str(tmp_path / "cm")
+        build_countmin_store(epoch(), "v", p, depth=4, width=256)
+        assert append_countmin_store(epoch("a", "b"), "v", p,
+                                     batch_id="epoch-0")
+        assert append_countmin_store(epoch("a"), "v", p,
+                                     batch_id="epoch-1")
+        assert compact_countmin_store(spark, p) == 3
+        assert not append_countmin_store(epoch("a", "b"), "v", p,
+                                         batch_id="epoch-0")
+        assert not append_countmin_store(epoch("a"), "v", p,
+                                         batch_id="epoch-1")
+        got = {r.value: r.est_count for r in
+               countmin_store_lookup(spark, p, ["a", "b"]).collect()}
+        assert got == {"a": 2, "b": 1}
+
     def test_compact_and_vacuum_preserve_counts(self, spark, tmp_path):
         import os
 
@@ -1030,85 +1057,6 @@ class TestBloomSaturation:
         # u0 is in group "0" only, u1 in "1" only (id%2 split)
         assert got[("0", "u0")] and got[("1", "u1")]
         assert not got[("1", "u0")] and not got[("0", "u1")]
-
-    def test_interrupted_grow_flip_self_heals(self, spark, tmp_path):
-        # r14 ADVICE: the two-rename flip is not atomic — a crash
-        # between rename(path->.pregrow) and rename(.grow->path)
-        # strands the store at .pregrow with no recovery path.  Every
-        # params read now heals that state first.
-        import os
-        import shutil
-
-        from zdb_spark.operators.sketches import (bloom_store_lookup,
-                                                  build_bloom_store,
-                                                  grow_bloom_store)
-
-        p = str(tmp_path / "cbloom")
-        df = spark.range(0, 100).select(
-            F.concat(F.lit("u"), F.col("id")).alias("v"))
-        build_bloom_store(df, "v", p, m_bits=4096, k=4)
-
-        # crash state A: old store renamed away, new never flipped in
-        # (a half-built scratch may also remain)
-        os.rename(p, p + ".pregrow")
-        os.makedirs(p + ".grow", exist_ok=True)
-        got = bloom_store_lookup(spark, p, ["u1", "zz"]).collect()
-        assert {r.value: r.maybe_present for r in got} ==             {"u1": True, "zz": False}          # old filter restored
-        assert not os.path.exists(p + ".pregrow")
-        # the heal must NOT touch the scratch: a reader landing in
-        # a LIVE grow's rename gap would otherwise delete the
-        # rebuild (r15 review finding); grow clears its own scratch
-        assert os.path.isdir(p + ".grow")
-        # an interrupted grow re-runs cleanly after the heal
-        assert grow_bloom_store(df, "v", p, m_bits=1 << 14) == 1 << 14
-        assert not os.path.exists(p + ".grow")
-
-        # crash state B: flip completed but the superseded store's
-        # deferred delete did not run — healed on next read
-        shutil.copytree(p, p + ".pregrow")
-        got2 = bloom_store_lookup(spark, p, ["u1"]).collect()
-        assert got2[0].maybe_present is True
-        assert not os.path.exists(p + ".pregrow")
-
-
-    def test_reader_heal_during_live_flip_grow_retries(self, spark,
-                                                       tmp_path,
-                                                       monkeypatch):
-        # r15 review finding: a reader healing inside the grow's
-        # rename gap must not lose the rebuild — the flip retries.
-        # Simulate the interleaving by healing FROM the grower's own
-        # thread between its two renames.
-        import os
-
-        from zdb_spark.operators import sketches as sk
-
-        p = str(tmp_path / "rbloom")
-        df = spark.range(0, 50).select(
-            F.concat(F.lit("u"), F.col("id")).alias("v"))
-        sk.build_bloom_store(df, "v", p, m_bits=4096, k=4)
-
-        real_rename = os.rename
-        state = {"healed": False}
-
-        def racing_rename(src, dst):
-            real_rename(src, dst)
-            # right after the grower moves the old store aside, a
-            # "reader" heals the canonical path back into place (once)
-            if (not state["healed"] and dst.endswith(".pregrow")
-                    and not os.path.exists(
-                        os.path.join(p, "params.json"))):
-                state["healed"] = True
-                sk._recover_bloom_store(p)
-
-        monkeypatch.setattr(os, "rename", racing_rename)
-        assert sk.grow_bloom_store(df, "v", p, m_bits=1 << 14) == 1 << 14
-        monkeypatch.undo()
-        assert state["healed"]                 # the race really fired
-        got = sk.bloom_store_lookup(spark, p, ["u1", "zz"]).collect()
-        assert {r.value: r.maybe_present for r in got} == \
-            {"u1": True, "zz": False}
-        assert not os.path.exists(p + ".pregrow")
-        assert not os.path.exists(p + ".grow")
 
 
 class TestBloomProbeChainGuards:

@@ -493,6 +493,62 @@ class TestCountMinSketchSink:
         assert again == whole
 
 
+    def test_restart_at_shipped_retention(self, spark, tmp_path):
+        # Five runs on one checkpoint over a growing source, at the
+        # session's shipped minBatchesToRetain=2.  Two restarts follow a
+        # crash after the offset was logged but before its commit, and a
+        # compaction between the crash and the restart: Spark re-runs
+        # that epoch, which the compaction already folded, and the
+        # store refuses it, so every row counts exactly once.
+        from zdb_spark.operators.sketches import (build_countmin_store,
+                                                  compact_countmin_store,
+                                                  countmin_table,
+                                                  read_countmin_table)
+        from zdb_spark.streaming.ingest import countmin_sketch_sink
+
+        assert spark.conf.get("spark.sql.streaming.minBatchesToRetain") == "2"
+        src, ckpt = str(tmp_path / "grow"), str(tmp_path / "cmckpt")
+        store = str(tmp_path / "store")
+        build_countmin_store(spark.createDataFrame([], "v string"), "v",
+                             store, depth=4, width=256)
+        written = []
+
+        def add_file():
+            k = len(written)
+            rows = [(f"w{(k + i) % 13}",) for i in range(10)]
+            spark.createDataFrame(rows, "v string").coalesce(1) \
+                .write.mode("append").parquet(src)
+            written.extend(rows)
+
+        def newest_commit():
+            return max(int(f) for f in
+                       os.listdir(os.path.join(ckpt, "commits"))
+                       if f.isdigit())
+
+        for run, (files, crash) in enumerate(
+                [(2, False), (1, True), (1, False), (1, True), (1, False)]):
+            for _ in range(files):
+                add_file()
+            if crash:
+                n = newest_commit()
+                for f in (str(n), f".{n}.crc"):
+                    if os.path.exists(os.path.join(ckpt, "commits", f)):
+                        os.unlink(os.path.join(ckpt, "commits", f))
+                assert compact_countmin_store(spark, store) > 1
+            stream = (spark.readStream.schema("v string")
+                      .option("maxFilesPerTrigger", 1).parquet(src))
+            q = countmin_sketch_sink(stream, "v", store, ckpt)
+            q.awaitTermination(120)
+            assert q.exception() is None
+            whole = countmin_table(spark.createDataFrame(written, "v string"),
+                                   "v", depth=4, width=256)
+            assert sorted(map(tuple, read_countmin_table(spark, store)
+                              .collect())) == \
+                sorted(map(tuple, whole.collect())), f"run {run}"
+        # the retention really purged: early batches' logs are gone
+        assert "0" not in os.listdir(os.path.join(ckpt, "offsets"))
+
+
 class TestTextIndexSink:
     def test_streamed_index_equals_live_bm25(self, spark, tmp_path):
         """Streaming index maintenance: after the stream drains, the

@@ -333,85 +333,6 @@ class TestHammingCap:
         assert a == b
 
 
-class TestGrowBloomLock:
-    """ADVICE r15: exactly one concurrent grower, enforced by the
-    .growlock sentinel."""
-
-    def test_second_grower_fails_loudly(self, spark, tmp_path):
-        import json
-        import os
-
-        import pytest
-
-        from zdb_spark.operators.sketches import (build_bloom_store,
-                                                  grow_bloom_store)
-
-        p = str(tmp_path / "b")
-        df = spark.range(0, 50).select(F.concat(
-            F.lit("u"), F.col("id")).alias("v"))
-        build_bloom_store(df, "v", p, m_bits=4096, k=4)
-        os.mkdir(p + ".growlock")
-        # a LIVE same-host grower (our own pid): never stolen
-        with open(os.path.join(p + ".growlock", "owner.json"),
-                  "w") as fh:
-            json.dump({"pid": os.getpid(), "host": __import__(
-                "socket").gethostname()}, fh)
-        with pytest.raises(OSError, match="another grower"):
-            grow_bloom_store(df, "v", p, m_bits=1 << 14)
-        # a DEAD same-host grower: lock stolen, grow proceeds
-        with open(os.path.join(p + ".growlock", "owner.json"),
-                  "w") as fh:
-            json.dump({"pid": 2**22 + 1234, "host": __import__(
-                "socket").gethostname()}, fh)
-        assert grow_bloom_store(df, "v", p, m_bits=1 << 14) == 1 << 14
-        assert not os.path.exists(p + ".growlock")
-        # a FOREIGN-host lock: never stolen regardless of pid
-        os.mkdir(p + ".growlock")
-        with open(os.path.join(p + ".growlock", "owner.json"),
-                  "w") as fh:
-            json.dump({"pid": 1, "host": "some-other-box"}, fh)
-        with pytest.raises(OSError, match="another grower"):
-            grow_bloom_store(df, "v", p, m_bits=1 << 15)
-
-    def test_recycled_pid_is_stolen(self, spark, tmp_path):
-        # ADVICE r16: a crashed grower's pid recycled by an unrelated
-        # LIVE process must not hold the lock forever — the start-time
-        # token disambiguates.  Our own (live) pid with a wrong token
-        # models exactly that; the same pid with NO token (old-format
-        # lock) keeps the conservative pid-only verdict.
-        import json
-        import os
-        import socket
-
-        import pytest
-
-        from zdb_spark.operators.sketches import (_proc_start_token,
-                                                  build_bloom_store,
-                                                  grow_bloom_store)
-
-        p = str(tmp_path / "b")
-        df = spark.range(0, 50).select(F.concat(
-            F.lit("u"), F.col("id")).alias("v"))
-        build_bloom_store(df, "v", p, m_bits=4096, k=4)
-        assert _proc_start_token(os.getpid()) is not None  # Linux box
-        os.mkdir(p + ".growlock")
-        with open(os.path.join(p + ".growlock", "owner.json"),
-                  "w") as fh:
-            json.dump({"pid": os.getpid(),
-                       "host": socket.gethostname(),
-                       "start": "0"}, fh)   # impossible token: recycled
-        assert grow_bloom_store(df, "v", p, m_bits=1 << 14) == 1 << 14
-        # same live pid, MATCHING token: held (a real live grower)
-        os.mkdir(p + ".growlock")
-        with open(os.path.join(p + ".growlock", "owner.json"),
-                  "w") as fh:
-            json.dump({"pid": os.getpid(),
-                       "host": socket.gethostname(),
-                       "start": _proc_start_token(os.getpid())}, fh)
-        with pytest.raises(OSError, match="another grower"):
-            grow_bloom_store(df, "v", p, m_bits=1 << 15)
-
-
 class TestStagedTableChanges:
     """Readiness pin for the table_changes gate (STAGED r18 for r19
     registration, the table_merge precedent; r17 verdict task 2): the

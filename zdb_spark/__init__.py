@@ -6,6 +6,8 @@ Modules:
 - session   — SparkSession factory (Arrow, AQE, UTC)
 - schema    — ColumnType/Schema builder (zdb src/schema.rs semantics)
 - table     — time-partitioned Parquet table: create/open/write/scan
+- store     — one publish protocol (version CAS, generation pointers)
+              for the table manifest and every persisted store
 - ohlcv     — fixed OHLCV aggregation endpoint + resampling
 - query     — /q-compatible UDF scan (signature-inferred projection)
 - calendar  — US equity trading calendar (is_market_open)

@@ -28,6 +28,8 @@ import math
 
 from pyspark.sql import DataFrame, functions as F
 
+from .. import store
+
 __all__ = ["bm25_topk", "corpus_term_stats", "build_text_index",
            "append_text_index", "text_index_topk", "compact_text_index",
            "vacuum_text_index", "delete_from_text_index"]
@@ -201,8 +203,11 @@ def rrf_fuse(rankings: list[tuple[DataFrame, str]],
 # bucket directories (partition pruning) and row-groups (term predicate
 # pushdown) — at 100 TB, milliseconds of postings instead of a full
 # scan.  Batches are doc-disjoint by contract (the dedup-store
-# contract); a replayed batch id overwrites its own dirs with identical
-# content, so appends are replay-idempotent without staging machinery.
+# contract) and publish through the ``store.py`` generation protocol:
+# a batch's postings and stats are staged, then renamed into the
+# current generation, stats last — a batch is visible once its stats
+# land, and readers take postings only from such batches.  A replayed
+# batch id, or one a compaction folded, is refused.
 #
 # Scoring parity is EXACT: document frequency, N, and avgdl recovered
 # from the store equal the live scan's values, idf literals are folded
@@ -225,22 +230,24 @@ def _term_bucket_py(term: str, buckets: int) -> int:
     return int(hashlib.md5(term.encode()).hexdigest()[:8], 16) % buckets
 
 
-def _ti_current_gen(path: str) -> int:
+def _ti_batches(gdir: str) -> list[str]:
+    """The generation's visible batches: those whose stats landed (a
+    publish renames stats last), so the postings of a publish that
+    crashed midway are never read."""
     import os
 
-    with open(os.path.join(path, "CURRENT")) as f:
-        return int(f.read().strip())
+    return [d for d in os.listdir(os.path.join(gdir, "stats"))
+            if d.startswith("batch=")]
 
 
-def _ti_set_current_gen(path: str, gen: int) -> None:
+def _ti_read(spark, gdir: str, part: str, batches: list[str]):
+    """``part`` (postings or stats) of ``batches``, with the batch and
+    bucket directories discovered as columns."""
     import os
 
-    tmp = os.path.join(path, "CURRENT.tmp")
-    with open(tmp, "w") as f:
-        f.write(str(gen))
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(path, "CURRENT"))
+    root = os.path.join(gdir, part)
+    return spark.read.option("basePath", root).parquet(
+        *[os.path.join(root, b) for b in batches])
 
 
 def build_text_index(df: DataFrame, path: str, text_col: str = "text",
@@ -255,7 +262,6 @@ def build_text_index(df: DataFrame, path: str, text_col: str = "text",
     if os.path.exists(os.path.join(path, "params.json")):
         raise FileExistsError(f"text index already exists at {path}")
     os.makedirs(path, exist_ok=True)
-    _ti_set_current_gen(path, 0)
     append_text_index(df, path, batch_id=0,
                       _params={"text_col": text_col, "id_col": id_col,
                                "buckets": buckets})
@@ -265,12 +271,12 @@ def build_text_index(df: DataFrame, path: str, text_col: str = "text",
 
 
 def append_text_index(df: DataFrame, path: str, *, batch_id,
-                      _params=None) -> None:
-    """Add one doc-disjoint batch to the CURRENT generation: postings
-    (term, id, tf, dl) under ``gen=<G>/postings/batch=<id>/``
-    partitioned by term bucket, plus a one-row
-    ``gen=<G>/stats/batch=<id>/`` (n_docs, total_len).  OVERWRITE per
-    batch dir = replay-idempotent.  Single-writer contract with
+                      _params=None) -> bool:
+    """Add one doc-disjoint batch to the current generation: postings
+    (term, id, tf, dl) under ``<gen>/postings/batch=<id>/`` partitioned
+    by term bucket, plus a one-row ``<gen>/stats/batch=<id>/``
+    (n_docs, total_len).  Returns False when ``batch_id`` was already
+    published or folded (a replay).  Single-writer contract with
     compaction (an append racing the pointer flip would strand its
     postings in a dead generation — same contract as the count-min
     store).  O(batch) work."""
@@ -282,7 +288,6 @@ def append_text_index(df: DataFrame, path: str, *, batch_id,
     if _params is None:
         with open(os.path.join(path, "params.json")) as f:
             _params = json.load(f)
-    gen = _ti_current_gen(path)
     text_col, id_col = _params["text_col"], _params["id_col"]
     buckets = _params["buckets"]
     toks = df.select(F.col(id_col).alias("_id"),
@@ -294,13 +299,16 @@ def append_text_index(df: DataFrame, path: str, *, batch_id,
                 .agg(F.count(F.lit(1)).alias("tf"))
                 .withColumn("bucket",
                             _term_bucket_col(F.col("term"), buckets)))
-    gdir = os.path.join(path, f"gen={gen}")
-    (postings.write.mode("overwrite").partitionBy("bucket")
-     .parquet(os.path.join(gdir, "postings", f"batch={batch_id}")))
     stats = toks.agg(F.count(F.lit(1)).alias("n_docs"),
                      F.sum("_dl").alias("total_len"))
-    (stats.write.mode("overwrite")
-     .parquet(os.path.join(gdir, "stats", f"batch={batch_id}")))
+    names = [f"postings/batch={batch_id}", f"stats/batch={batch_id}"]
+
+    def write(staging):
+        (postings.write.partitionBy("bucket")
+         .parquet(os.path.join(staging, names[0])))
+        stats.write.parquet(os.path.join(staging, names[1]))
+
+    return store.publish_batch(path, "gen=0", names, write)
 
 
 def _ti_deletes(spark, gdir: str):
@@ -336,33 +344,20 @@ def delete_from_text_index(spark, path: str, ids: DataFrame, *,
     — a replayed ``batch_id`` is a no-op (returns False).  Deleted
     postings are physically dropped at the next compaction."""
     import os
-    import shutil
-    import uuid
 
-    gen = _ti_current_gen(path)
-    gdir = os.path.join(path, f"gen={gen}")
-    dest = os.path.join(gdir, "deletes", f"batch={batch_id}")
-    if os.path.exists(dest):
-        return False
+    _, gdir, _ = store.resolve_generation(path, "gen=0")
+    name = f"deletes/batch={batch_id}"
     id_col = ids.columns[0]
     want = ids.select(F.col(id_col).alias("_id")).distinct()
-    proot = os.path.join(gdir, "postings")
-    posts = (spark.read.option("basePath", proot)
-             .parquet(os.path.join(proot, "batch=*"))
+    posts = (_ti_read(spark, gdir, "postings", _ti_batches(gdir))
              .select("_id", "_dl").distinct())
     rows = posts.join(want, "_id", "left_semi")
     dels = _ti_deletes(spark, gdir)
     if dels is not None:
         rows = rows.join(dels.select("_id"), "_id", "left_anti")
-    staging = os.path.join(path, "_staging", uuid.uuid4().hex)
-    rows.write.mode("overwrite").parquet(staging)
-    os.makedirs(os.path.dirname(dest), exist_ok=True)
-    try:
-        os.rename(staging, dest)
-    except OSError:
-        shutil.rmtree(staging, ignore_errors=True)
-        return False
-    return True
+    return store.publish_batch(
+        path, "gen=0", [name],
+        lambda staging: rows.write.parquet(os.path.join(staging, name)))
 
 
 def compact_text_index(spark, path: str) -> int:
@@ -372,40 +367,33 @@ def compact_text_index(spark, path: str) -> int:
     (df(t) counts rows), so a reader racing a delete-after-publish
     compaction would double document frequencies — the generation
     pointer (resolved once per read) makes that state unreachable,
-    exactly as in the count-min store.  Returns the number of source
-    batches folded; old generations stay for in-flight readers until
+    exactly as in the count-min store.  The new pointer records the
+    batches it folded, so a replay of one of them is refused.  Returns
+    the number of source batches folded.  A compaction that crashed
+    before its flip left only an unpublished directory: the old
+    generation still answers and a rerun starts afresh.  Old
+    generations stay for in-flight readers until
     ``vacuum_text_index``.  Single compactor/writer by contract."""
     import os
 
-    gen = _ti_current_gen(path)
-    gdir = os.path.join(path, f"gen={gen}")
-    sources = [d for d in os.listdir(os.path.join(gdir, "postings"))
+    gen, gdir, doc = store.resolve_generation(path, "gen=0")
+    batches = _ti_batches(gdir)
+    droot = os.path.join(gdir, "deletes")
+    deletes = [f"deletes/{d}" for d in
+               (os.listdir(droot) if os.path.isdir(droot) else ())
                if d.startswith("batch=")]
-    has_deletes = os.path.isdir(os.path.join(gdir, "deletes")) and any(
-        d.startswith("batch=")
-        for d in os.listdir(os.path.join(gdir, "deletes")))
-    if len(sources) <= 1 and not has_deletes:
+    if len(batches) <= 1 and not deletes:
         return 0
-    ndir = os.path.join(path, f"gen={gen + 1}")
-    if os.path.exists(ndir):
-        raise RuntimeError(
-            f"gen={gen + 1} already exists at {path} — a previous "
-            "compaction crashed between write and pointer flip; flip "
-            "or remove it by hand (single-compactor contract)")
-    proot = os.path.join(gdir, "postings")
-    posts = (spark.read.option("basePath", proot)
-             .parquet(os.path.join(proot, "batch=*"))
-             .drop("batch"))
+    ndir = store.new_generation_dir(path, gen + 1)
+    posts = _ti_read(spark, gdir, "postings", batches).drop("batch")
     dels = _ti_deletes(spark, gdir)
     if dels is not None:
         # deleted docs' postings are physically dropped here, and the
         # new generation starts with an empty delete ledger
         posts = posts.join(dels.select("_id"), "_id", "left_anti")
-    (posts.write.mode("overwrite").partitionBy("bucket")
+    (posts.write.partitionBy("bucket")
      .parquet(os.path.join(ndir, "postings", "batch=compacted")))
-    sroot = os.path.join(gdir, "stats")
-    stats = (spark.read.option("basePath", sroot)
-             .parquet(os.path.join(sroot, "batch=*"))
+    stats = (_ti_read(spark, gdir, "stats", batches)
              .agg(F.sum("n_docs").alias("n_docs"),
                   F.sum("total_len").alias("total_len")))
     if dels is not None:
@@ -415,26 +403,19 @@ def compact_text_index(spark, path: str) -> int:
             (F.col("n_docs") - F.lit(adj["_dn"] or 0)).alias("n_docs"),
             (F.col("total_len") - F.lit(adj["_dtl"] or 0))
             .alias("total_len"))
-    (stats.write.mode("overwrite")
-     .parquet(os.path.join(ndir, "stats", "batch=compacted")))
-    _ti_set_current_gen(path, gen + 1)
-    return len(sources)
+    stats.write.parquet(os.path.join(ndir, "stats", "batch=compacted"))
+    store.flip_generation(path, gen + 1, ndir, {
+        *doc.get("folded", ()), *deletes,
+        *[f"stats/{b}" for b in batches if b != "batch=compacted"]})
+    return len(batches)
 
 
 def vacuum_text_index(path: str) -> int:
-    """Remove generations older than CURRENT.  Run only when no reader
-    can still hold a pre-compaction pointer.  Returns the number of
-    generation dirs removed."""
-    import os
-    import shutil
-
-    cur = _ti_current_gen(path)
-    removed = 0
-    for d in os.listdir(path):
-        if d.startswith("gen=") and int(d.split("=", 1)[1]) < cur:
-            shutil.rmtree(os.path.join(path, d), ignore_errors=True)
-            removed += 1
-    return removed
+    """Remove generations older than the current one plus any staging
+    leftovers.  Run only when no reader can still hold a
+    pre-compaction pointer.  Returns the number of directories
+    removed."""
+    return store.vacuum_generations(path, "gen=0")
 
 
 def text_index_topk(spark, path: str, query: str, k: int = 10,
@@ -457,11 +438,10 @@ def text_index_topk(spark, path: str, query: str, k: int = 10,
     terms = sorted(set(query.lower().split()))
     if not terms:
         raise ValueError("empty query")
-    gdir = os.path.join(path, f"gen={_ti_current_gen(path)}")
+    _, gdir, _ = store.resolve_generation(path, "gen=0")
+    batches = _ti_batches(gdir)
 
-    sroot = os.path.join(gdir, "stats")
-    stats = spark.read.option("basePath", sroot).parquet(
-        os.path.join(sroot, "batch=*"))
+    stats = _ti_read(spark, gdir, "stats", batches)
     srow = stats.agg(F.sum("n_docs").alias("n"),
                      F.sum("total_len").alias("tl")).collect()[0]
     n, tl = srow["n"] or 0, srow["tl"] or 0
@@ -476,10 +456,8 @@ def text_index_topk(spark, path: str, query: str, k: int = 10,
     # same exact-integer division Spark's avg(size) performs
     avgdl = tl / n
 
-    proot = os.path.join(gdir, "postings")
     want = sorted({_term_bucket_py(t, buckets) for t in terms})
-    posts = (spark.read.option("basePath", proot)
-             .parquet(os.path.join(proot, "batch=*"))
+    posts = (_ti_read(spark, gdir, "postings", batches)
              .where(F.col("bucket").isin(want)
                     & F.col("term").isin(terms)))
     if dels is not None:

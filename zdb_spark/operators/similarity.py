@@ -24,6 +24,7 @@ import numpy as np
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from .. import store
 from ..functions.scalar import round0
 
 __all__ = ["cosine_sim", "brute_force_topk", "hyperplane_signature",
@@ -680,10 +681,6 @@ def append_ivf_index(df: DataFrame, path: str,
        .parquet(_index_data_dir(path)))
 
 
-def _gen_pointer_dir(path: str) -> str:
-    return os.path.join(path, "_gen")
-
-
 def _reset_generations(path: str) -> None:
     """Full rebuild: clear generation pointers and compacted dirs so the
     freshly-written ``data/`` (generation 0) is what readers resolve —
@@ -691,88 +688,30 @@ def _reset_generations(path: str) -> None:
     pointer at the old generation."""
     import shutil
 
-    shutil.rmtree(_gen_pointer_dir(path), ignore_errors=True)
+    shutil.rmtree(os.path.join(path, store.GEN_DIR), ignore_errors=True)
     try:
         names = os.listdir(path)
     except FileNotFoundError:
         return
     for name in names:
-        if name.startswith("data-g"):
+        if name.startswith(("data-g", "gen=")):
             shutil.rmtree(os.path.join(path, name), ignore_errors=True)
 
 
 def current_generation(path: str) -> tuple[int, str]:
     """(generation, data directory) of a persisted index.
 
-    Generation 0 is the legacy layout (``data/`` with no ``_gen``
-    pointers — every index built before generations existed resolves
-    unchanged).  Each compaction publishes generation N as a pointer
-    file ``_gen/vN.json`` naming an immutable ``data-gN/`` directory;
-    the highest published pointer wins.  Readers resolve the pointer
-    once per probe, so a probe runs wholly against one complete
-    generation — never a half-swapped mix."""
-    d = _gen_pointer_dir(path)
-    try:
-        gens = [int(f[1:13]) for f in os.listdir(d)
-                if f.startswith("v") and f.endswith(".json")]
-    except FileNotFoundError:
-        gens = []
-    if not gens:
-        return 0, os.path.join(path, "data")
-    g = max(gens)
-    with open(os.path.join(d, f"v{g:012d}.json")) as f:
-        return g, os.path.join(path, json.load(f)["data_dir"])
+    Generation 0 is ``data/`` with no pointer published (every index
+    built before generations existed resolves unchanged).  Each
+    compaction publishes the next generation as a ``store.py`` pointer
+    naming an immutable data directory; readers resolve it once per
+    probe, so a probe runs wholly against one complete generation —
+    never a half-swapped mix."""
+    return store.resolve_generation(path, "data")[:2]
 
 
 def _index_data_dir(path: str) -> str:
     return current_generation(path)[1]
-
-
-def _publish_generation(path: str, gen: int, data_dir_name: str) -> bool:
-    """CAS-publish generation ``gen`` (the table manifest's protocol,
-    table.py ``_try_publish_manifest``): write a private fsync'd tmp,
-    then ``os.link`` it to the generation name — link creation fails
-    with EEXIST iff another compactor already won this generation, and
-    it can never overwrite a winner the way rename would."""
-    import uuid as _uuid
-
-    d = _gen_pointer_dir(path)
-    os.makedirs(d, exist_ok=True)
-    tmp = os.path.join(d, f".v{gen:012d}.{_uuid.uuid4().hex}.tmp")
-    with open(tmp, "w") as f:
-        json.dump({"data_dir": data_dir_name}, f)
-        f.flush()
-        os.fsync(f.fileno())
-    try:
-        os.link(tmp, os.path.join(d, f"v{gen:012d}.json"))
-        return True
-    except FileExistsError:
-        return False
-    finally:
-        os.unlink(tmp)
-
-
-def _vacuum_generations(path: str, current: int) -> None:
-    """Delete data directories more than one generation behind.
-
-    The previous generation is kept so probes that resolved the pointer
-    just before the flip finish against a complete directory; anything
-    older has had a full compaction cycle to drain (same grace contract
-    as table snapshot + vacuum)."""
-    import shutil
-
-    for name in os.listdir(path):
-        if name == "data":
-            g = 0
-        elif name.startswith("data-g"):
-            try:
-                g = int(name[6:])
-            except ValueError:
-                continue
-        else:
-            continue
-        if g < current - 1:
-            shutil.rmtree(os.path.join(path, name), ignore_errors=True)
 
 
 def index_data_files(path: str) -> list[str]:
@@ -790,18 +729,17 @@ def compact_ann_index(spark: SparkSession, path: str) -> int:
     at full strength; IVF: per ``centroid_id``).
 
     Atomic for concurrent PROBES: the compacted copy is written to a
-    fresh immutable ``data-g{N+1}/`` directory and becomes visible only
-    when the generation pointer CAS-publishes (exclusive create — the
-    table manifest's protocol); a concurrent probe reads either the old
-    complete generation or the new one, never a mix, and losing a
-    concurrent-compactor race cleans up and raises instead of
-    corrupting.  Old generations beyond the previous one are vacuumed.
+    fresh directory private to this run and becomes the next generation
+    only when its ``store.py`` pointer publishes (exclusive create); a
+    concurrent probe reads either the old complete generation or the
+    new one, never a mix.  A compactor that loses the publish to a
+    concurrent one deletes its output and raises ``OSError``.
+    Generations older than the previous one are vacuumed; the previous
+    one stays for probes that resolved it just before the flip.
     Appends remain single-maintainer: an append racing the compactor's
     read can land files in the outgoing generation and be dropped by the
     flip — serialize appends and compaction in one maintenance queue.
     Returns the file count after."""
-    import shutil
-
     with open(os.path.join(path, "_meta")) as f:
         meta = json.load(f)
     key = "t" if meta["kind"] == "lsh" else "centroid_id"
@@ -809,15 +747,10 @@ def compact_ann_index(spark: SparkSession, path: str) -> int:
     rows = spark.read.parquet(src).repartition(key)
     if meta["kind"] == "lsh":
         rows = rows.sortWithinPartitions("t", "sig")
-    new_name = f"data-g{gen + 1}"
-    dst = os.path.join(path, new_name)
+    dst = store.new_generation_dir(path, gen + 1)
     rows.write.mode("overwrite").partitionBy(key).parquet(dst)
-    if not _publish_generation(path, gen + 1, new_name):
-        shutil.rmtree(dst, ignore_errors=True)
-        raise RuntimeError(
-            f"concurrent compaction won generation {gen + 1} on {path}; "
-            "this run's output was discarded")
-    _vacuum_generations(path, gen + 1)
+    store.flip_generation(path, gen + 1, dst)
+    store.vacuum_generations(path, "data", keep=2)
     return len(index_data_files(path))
 
 

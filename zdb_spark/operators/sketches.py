@@ -60,6 +60,7 @@ import math
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .. import store
 from ..functions.scalar import round0
 
 __all__ = ["hll_registers", "hll_distinct", "countmin_table",
@@ -435,24 +436,26 @@ def compact_hll_store(spark, path: str) -> int:
 # IDEMPOTENT — replaying a batch changes nothing.  Count-min cells merge
 # with ``+``, and addition is NOT idempotent: a batch read twice (torn
 # overwrite, replayed publish, compaction racing a reader over
-# source+compacted rows) silently DOUBLE-COUNTS.  So this store makes
-# every visibility change a single atomic POSIX rename:
+# source+compacted rows) silently DOUBLE-COUNTS.  So every visibility
+# change goes through the ``store.py`` generation protocol:
 #
-# - appends write to ``_staging/<nonce>`` (never read) and publish by
-#   renaming the whole directory to ``gen=<G>/batch=<id>``; a replayed
-#   batch id finds the destination taken and discards its staging —
-#   FIRST-publish-wins exactly-once, not overwrite-idempotence.
-# - compaction writes the summed table as ``gen=<G+1>/batch=compacted``
-#   and then flips the ``CURRENT`` generation pointer (write-temp +
-#   os.replace).  A reader resolves CURRENT once and reads exactly one
-#   generation, so it can NEVER see source and compacted cells together
-#   (the additive double-count hazard the HLL store's delete-after-
-#   publish compaction tolerates by idempotence).  Old generations stay
-#   on disk for in-flight readers until ``vacuum_countmin_store``.
+# - appends stage under ``_staging/<nonce>`` (never read) and publish by
+#   renaming the batch to ``<generation>/batch=<id>``; a replayed batch
+#   id finds the destination taken, or folded by a compaction, and
+#   discards its staging — FIRST-publish-wins exactly-once, not
+#   overwrite-idempotence.
+# - compaction writes the summed table into a fresh generation
+#   directory and then publishes its ``_gen`` pointer, which records the
+#   batch ids it folded.  A reader resolves the pointer once and reads
+#   exactly one generation, so it can NEVER see source and compacted
+#   cells together (the additive double-count hazard the HLL store's
+#   delete-after-publish compaction tolerates by idempotence).  Old
+#   generations stay on disk for in-flight readers until
+#   ``vacuum_countmin_store``.
 # - writers (appends + compactions) are SINGLE-WRITER by caller
 #   contract, same as the minhash store: an append publishing into
-#   generation G while a compactor flips CURRENT to G+1 would strand
-#   its counts in a dead generation.  Readers are concurrency-safe.
+#   generation G while a compactor flips to G+1 would strand its counts
+#   in a dead generation.  Readers are concurrency-safe.
 def _cm_params(path: str) -> dict:
     import json
     import os
@@ -466,24 +469,6 @@ def _cm_params(path: str) -> dict:
     return p
 
 
-def _cm_current_gen(path: str) -> int:
-    import os
-
-    with open(os.path.join(path, "CURRENT")) as f:
-        return int(f.read().strip())
-
-
-def _cm_set_current_gen(path: str, gen: int) -> None:
-    import os
-
-    tmp = os.path.join(path, "CURRENT.tmp")
-    with open(tmp, "w") as f:
-        f.write(str(gen))
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(path, "CURRENT"))
-
-
 def build_countmin_store(df: DataFrame, value_col: str, path: str, *,
                          depth: int = 4, width: int = 1024) -> None:
     """Create the store and publish the corpus as ``batch=0`` of
@@ -494,64 +479,50 @@ def build_countmin_store(df: DataFrame, value_col: str, path: str, *,
 
     if os.path.exists(os.path.join(path, "params.json")):
         raise FileExistsError(f"count-min store already exists at {path}")
-    os.makedirs(os.path.join(path, "gen=0"), exist_ok=True)
-    _cm_set_current_gen(path, 0)
+    os.makedirs(path, exist_ok=True)
     _cm_publish_batch(countmin_table(df, value_col, depth=depth,
-                                     width=width), path, 0, 0)
+                                     width=width), path, 0)
     with open(os.path.join(path, "params.json"), "w") as f:
         json.dump({"version": 1, "depth": depth, "width": width}, f)
 
 
-def _cm_publish_batch(cells: DataFrame, path: str, gen: int,
-                      batch_id) -> bool:
-    """Stage-then-rename publish of one batch's cell table.  Returns
-    False (and discards the staging) when ``batch_id`` is already
-    published in this generation — the replay no-op that makes additive
-    appends exactly-once."""
+def _cm_publish_batch(cells: DataFrame, path: str, batch_id) -> bool:
+    """Publish one batch's cell table; False when ``batch_id`` was
+    already published or folded (the replay no-op that makes additive
+    appends exactly-once)."""
     import os
-    import shutil
-    import uuid
 
-    dest = os.path.join(path, f"gen={gen}", f"batch={batch_id}")
-    if os.path.exists(dest):
-        return False
-    staging = os.path.join(path, "_staging", uuid.uuid4().hex)
-    cells.write.mode("overwrite").parquet(staging)
-    os.makedirs(os.path.dirname(dest), exist_ok=True)
-    try:
-        os.rename(staging, dest)
-    except OSError:
-        # lost the publish race (or a replay finished first): the
-        # destination's content is the same batch — discard ours
-        shutil.rmtree(staging, ignore_errors=True)
-        return False
-    return True
+    name = f"batch={batch_id}"
+    return store.publish_batch(
+        path, "gen=0", [name],
+        lambda staging: cells.write.parquet(os.path.join(staging, name)))
 
 
 def append_countmin_store(df: DataFrame, value_col: str, path: str, *,
                           batch_id) -> bool:
-    """Add one batch's cells to the CURRENT generation.  O(batch) work;
+    """Add one batch's cells to the current generation.  O(batch) work;
     returns False when ``batch_id`` was already published (replay)."""
     p = _cm_params(path)
     cells = countmin_table(df, value_col, depth=p["depth"],
                            width=p["width"])
-    return _cm_publish_batch(cells, path, _cm_current_gen(path),
-                             batch_id)
+    return _cm_publish_batch(cells, path, batch_id)
+
+
+def _cm_cells(spark, gdir: str) -> DataFrame:
+    import os
+
+    cells = spark.read.parquet(os.path.join(gdir, "batch=*"))
+    return (cells.groupBy("row", "bucket")
+            .agg(F.sum("n").alias("n")))
 
 
 def read_countmin_table(spark, path: str) -> DataFrame:
-    """The store's merged cell table — union of the CURRENT
+    """The store's merged cell table — union of the current
     generation's batches, summed per (row, bucket).  Resolves the
     generation pointer ONCE, so a compaction finishing mid-read never
     mixes source and compacted cells into the sum."""
-    import os
-
     _cm_params(path)
-    gen = _cm_current_gen(path)
-    cells = spark.read.parquet(
-        os.path.join(path, f"gen={gen}", "batch=*"))
-    return (cells.groupBy("row", "bucket")
-            .agg(F.sum("n").alias("n")))
+    return _cm_cells(spark, store.resolve_generation(path, "gen=0")[1])
 
 
 def countmin_store_lookup(spark, path: str,
@@ -566,53 +537,34 @@ def countmin_store_lookup(spark, path: str,
 def compact_countmin_store(spark, path: str) -> int:
     """Fold the current generation's batches into one batch of a NEW
     generation, then flip the pointer.  Returns the number of source
-    batches folded (0 = nothing to do).  Old generations are left for
-    in-flight readers; reclaim with ``vacuum_countmin_store``."""
+    batches folded (0 = nothing to do).  A compaction that crashed
+    before its flip left only an unpublished directory: the old
+    generation still answers and a rerun starts afresh.  Old
+    generations are left for in-flight readers; reclaim with
+    ``vacuum_countmin_store``."""
     import os
 
     _cm_params(path)
-    gen = _cm_current_gen(path)
-    gdir = os.path.join(path, f"gen={gen}")
+    gen, gdir, doc = store.resolve_generation(path, "gen=0")
     sources = [d for d in os.listdir(gdir) if d.startswith("batch=")]
     if len(sources) <= 1:
         return 0
-    merged = read_countmin_table(spark, path)
-    published = _cm_publish_batch(merged, path, gen + 1, "compacted")
-    if not published:
-        raise RuntimeError(
-            f"gen={gen + 1}/batch=compacted already exists at {path} — "
-            "a previous compaction crashed between publish and pointer "
-            "flip; flip or remove it by hand (single-compactor "
-            "contract)")
-    _cm_set_current_gen(path, gen + 1)
+    ndir = store.new_generation_dir(path, gen + 1)
+    _cm_cells(spark, gdir).write.parquet(
+        os.path.join(ndir, "batch=compacted"))
+    store.flip_generation(path, gen + 1, ndir, {
+        *doc.get("folded", ()), *sources} - {"batch=compacted"})
     return len(sources)
 
 
 def vacuum_countmin_store(path: str) -> int:
-    """Remove generations older than CURRENT plus any staging leftovers
-    (crashed writes that never published — invisible to readers either
-    way).  Run only when no reader can still hold a pre-compaction
-    pointer.  Returns the number of directories removed."""
-    import os
-    import shutil
-
+    """Remove generations older than the current one plus any staging
+    leftovers (crashed writes that never published — invisible to
+    readers either way).  Run only when no reader can still hold a
+    pre-compaction pointer.  Returns the number of directories
+    removed."""
     _cm_params(path)
-    cur = _cm_current_gen(path)
-    removed = 0
-    for d in os.listdir(path):
-        full = os.path.join(path, d)
-        if d.startswith("gen=") and int(d.split("=", 1)[1]) < cur:
-            shutil.rmtree(full, ignore_errors=True)
-            removed += 1
-        elif d == "_staging":
-            for s in os.listdir(full):
-                shutil.rmtree(os.path.join(full, s), ignore_errors=True)
-                removed += 1
-            try:
-                os.rmdir(full)
-            except OSError:
-                pass
-    return removed
+    return store.vacuum_generations(path, "gen=0")
 
 
 def merge_kmv_samples(samples: list[DataFrame], id_col: str, by=None, *,
@@ -907,8 +859,7 @@ def retract_countmin_store(df: DataFrame, value_col: str, path: str, *,
                            width=p["width"])
     negated = cells.select("row", "bucket",
                            (-F.col("n")).alias("n"))
-    return _cm_publish_batch(negated, path, _cm_current_gen(path),
-                             batch_id)
+    return _cm_publish_batch(negated, path, batch_id)
 
 
 # ---------------------------------------------------------------------- #
@@ -926,7 +877,7 @@ def retract_countmin_store(df: DataFrame, value_col: str, path: str, *,
 # engine replays the full word table AND every membership verdict
 # bit-for-bit.  Merge across epochs/engines is bitwise OR — IDEMPOTENT,
 # so the persisted store below reuses the HLL store's overwrite-batch
-# durability story verbatim (no staging/generation machinery).
+# appends (no staging); its one generation step is the grow flip.
 # References: Bloom 1970 (space/time trade-offs in hash coding);
 # Broder & Mitzenmacher 2004 (network applications survey — the
 # (1-e^{-kn/m})^k ≈ (fill)^k false-positive analysis).
@@ -1052,7 +1003,11 @@ def bloom_stats(table: DataFrame, by=None, *, m_bits: int = 1 << 20,
 # bit_or is idempotent (x | x = x), so this store is the HLL store's
 # durability story with a different merge operator: per-batch-dir
 # OVERWRITE writes, union + bit_or on read, delete-after-publish
-# compaction that racing readers survive.  No staging, no generations.
+# compaction that racing readers survive.  No staging.  The filter
+# (params.json + words/) lives in the store root until the first
+# ``grow_bloom_store``, which writes the grown filter as the next
+# ``store.py`` generation and flips the pointer; every operation
+# resolves the filter directory once (``_bloom_store``).
 def build_bloom_store(df: DataFrame, value_col: str, path: str,
                       by=None, *, m_bits: int = 1 << 20,
                       k: int = 4) -> None:
@@ -1081,63 +1036,35 @@ def append_bloom_store(df: DataFrame, value_col: str, path: str, *,
     replaying the same batch id is a no-op by bit_or idempotence — the
     exactly-once contract streaming sinks need).  O(batch) work; the
     stored history is untouched."""
-    import json
     import os
 
+    d = path
     if _params is None:
-        _params = _bloom_store_params(path)
+        d, _params = _bloom_store(path)
     words = bloom_words(df, value_col, _params["by"] or None,
                         m_bits=_params["m_bits"], k=_params["k"])
     (words.write.mode("overwrite")
-     .parquet(os.path.join(path, "words", f"batch={batch_id}")))
+     .parquet(os.path.join(d, "words", f"batch={batch_id}")))
 
 
-def _recover_bloom_store(path: str) -> None:
-    """Crash recovery for ``grow_bloom_store``'s two-rename flip (the
-    flip is NOT atomic: a crash between ``rename(path -> .pregrow)``
-    and ``rename(.grow -> path)`` leaves the store existing only at
-    ``<path>.pregrow``).  A lone ``.pregrow`` means the flip did not
-    complete — the OLD filter is still authoritative, so restore it
-    (an interrupted grow simply re-runs).  If both exist the flip
-    completed and ``.pregrow`` is the superseded store: finish its
-    deferred delete.  Every params read routes through
-    :func:`_bloom_store_params`, so any store operation after a crash
-    self-heals before touching data.
-
-    Concurrency discipline: recovery NEVER touches the ``.grow``
-    scratch (a reader landing in a LIVE grow's rename gap must not
-    delete the just-built rebuild — grow owns and clears its own
-    scratch), every rename tolerates losing a race to another healer
-    (the winner's result is exactly the state this function wants),
-    and a reader that heals during a live flip only forces the grower
-    to retry its flip (see grow_bloom_store's retry loop) — a
-    retryable window, never a wrong answer."""
-    import os
-    import shutil
-
-    old = path + ".pregrow"
-    if not os.path.exists(os.path.join(old, "params.json")):
-        return
-    if os.path.exists(os.path.join(path, "params.json")):
-        shutil.rmtree(old, ignore_errors=True)      # flip completed
-        return
-    try:
-        os.rename(old, path)
-    except OSError:
-        # another healer won the race, or the grower completed its
-        # flip between our two checks — both leave a healthy store
-        pass
-
-
-def _bloom_store_params(path: str) -> dict:
-    """Load a Bloom store's pinned params, healing an interrupted
-    ``grow_bloom_store`` flip first (see ``_recover_bloom_store``)."""
+def _bloom_store(path: str) -> tuple[str, dict]:
+    """(directory, params) of the store's current filter, resolved once:
+    a grow flipping mid-operation never pairs one filter's params with
+    another's words."""
     import json
     import os
 
-    _recover_bloom_store(path)
-    with open(os.path.join(path, "params.json")) as f:
-        return json.load(f)
+    d = store.resolve_generation(path, ".")[1]
+    with open(os.path.join(d, "params.json")) as f:
+        return d, json.load(f)
+
+
+def _bloom_words_at(spark, d: str, by: list) -> DataFrame:
+    import os
+
+    words = spark.read.parquet(os.path.join(d, "words", "batch=*"))
+    return (words.groupBy(*by, "word_idx")
+            .agg(F.bit_or("word").alias("word")))
 
 
 def read_bloom_words(spark, path: str) -> DataFrame:
@@ -1145,12 +1072,8 @@ def read_bloom_words(spark, path: str) -> DataFrame:
     (by..., word_idx) — EXACTLY the whole-corpus ``bloom_words`` (OR is
     associative/commutative/idempotent over any batch split).  Reads
     (batches x groups x m_bits/32) word rows, never the corpus."""
-    import os
-
-    by = _bloom_store_params(path)["by"]
-    words = spark.read.parquet(os.path.join(path, "words", "batch=*"))
-    return (words.groupBy(*by, "word_idx")
-            .agg(F.bit_or("word").alias("word")))
+    d, p = _bloom_store(path)
+    return _bloom_words_at(spark, d, p["by"])
 
 
 def bloom_store_lookup(spark, path: str, values: list[str]) -> DataFrame:
@@ -1158,11 +1081,11 @@ def bloom_store_lookup(spark, path: str, values: list[str]) -> DataFrame:
     output contract and bit-determinism as ``bloom_lookup`` on the
     whole-corpus table (the store's params pin m_bits/k).  Grouped
     stores answer per group via ``bloom_store_lookup_by``."""
-    p = _bloom_store_params(path)
+    d, p = _bloom_store(path)
     if p["by"]:
         raise ValueError("bloom_store_lookup requires an ungrouped "
                          "store (by=[]); use bloom_store_lookup_by")
-    return bloom_lookup(read_bloom_words(spark, path), values,
+    return bloom_lookup(_bloom_words_at(spark, d, []), values,
                         m_bits=p["m_bits"], k=p["k"])
 
 
@@ -1174,11 +1097,11 @@ def bloom_store_lookup_by(spark, path: str,
     distinct-address accounting as ``bloom_lookup``; the group list
     comes from the word table itself (a group with no words answers
     false for everything, correctly — it set no bits)."""
-    p = _bloom_store_params(path)
+    d, p = _bloom_store(path)
     by = p["by"]
     if not by:
         return bloom_store_lookup(spark, path, values)
-    table = read_bloom_words(spark, path)
+    table = _bloom_words_at(spark, d, by)
     q = spark.createDataFrame([(v,) for v in values], "value string")
     addr = (_bloom_addressed(q, "value", [], m_bits=p["m_bits"],
                              k=p["k"]).distinct())
@@ -1204,12 +1127,13 @@ def compact_bloom_store(spark, path: str) -> int:
     import os
     import shutil
 
-    wdir = os.path.join(path, "words")
+    fdir, p = _bloom_store(path)
+    wdir = os.path.join(fdir, "words")
     sources = sorted(d for d in os.listdir(wdir)
                      if d.startswith("batch="))
     if len(sources) <= 1:
         return 0
-    merged = read_bloom_words(spark, path)
+    merged = _bloom_words_at(spark, fdir, p["by"])
     n = len([d for d in sources if d.startswith("batch=compact-")])
     out = os.path.join(wdir, f"batch=compact-{n}")
     while os.path.basename(out) in sources:
@@ -1231,44 +1155,27 @@ def bloom_store_saturation(spark, path: str, *,
     nothing else in the store will ever say so.  Run it on the ingest
     cadence; a ``saturated`` row means rebuild via
     ``grow_bloom_store``."""
-    p = _bloom_store_params(path)
-    stats = bloom_stats(read_bloom_words(spark, path), p["by"] or None,
+    d, p = _bloom_store(path)
+    stats = bloom_stats(_bloom_words_at(spark, d, p["by"]),
+                        p["by"] or None,
                         m_bits=p["m_bits"], k=p["k"])
     return stats.withColumn(
         "saturated", F.col("fpr_est") > F.lit(float(fpr_threshold)))
-
-
-def _proc_start_token(pid: int) -> str | None:
-    """Kernel start-time token for ``pid`` (Linux ``/proc/<pid>/stat``
-    field 22, clock ticks since boot): same pid + same token == same
-    process, so a lock whose recorded token differs from the live
-    pid's was left by a DEAD grower whose pid got recycled.  ``comm``
-    (field 2) may contain spaces and parens, so fields count from
-    after the LAST ``)``.  None where /proc is unavailable (non-Linux)
-    — callers must then fall back to pid-liveness alone."""
-    try:
-        with open(f"/proc/{pid}/stat", "rb") as fh:
-            data = fh.read()
-        return data.rsplit(b")", 1)[1].split()[19].decode()
-    except (OSError, IndexError, ValueError):
-        return None
 
 
 def grow_bloom_store(df: DataFrame, value_col: str, path: str, *,
                      m_bits: int | None = None,
                      k: int | None = None) -> int:
     """REBUILD a saturated store at a larger ``m_bits`` (default 4x)
-    from the AUTHORITATIVE corpus ``df`` — scratch build, then a
-    two-rename flip (``path -> .pregrow``, ``.grow -> path``).  The
-    flip is NOT atomic: a reader in the gap sees no store at the
-    canonical path, and a crash between the renames leaves the store
-    only at ``.pregrow`` — both healed by ``_recover_bloom_store``,
-    which every store params read runs first (a lone ``.pregrow`` is
-    restored as the still-authoritative old filter; a leftover one
-    next to a completed flip is deleted).  Readers therefore see the
-    old filter until the flip and the new one after, never a mix — at
-    the cost of a retryable window, not a wrong answer.  Returns the
-    new m_bits.
+    from the AUTHORITATIVE corpus ``df``, as the store's next
+    generation: the grown filter is built in a fresh directory private
+    to this call, then the ``store.py`` pointer flips to it.  Readers
+    resolve one complete filter, old or new — never a mix, never a gap.
+    A grower that loses the flip to a concurrent one deletes its output
+    and raises ``OSError``; one that crashes before the flip leaves the
+    old filter answering, and a rerun succeeds.  The previous filter
+    stays for readers that resolved it just before the flip; older ones
+    are deleted.  Returns the new m_bits.
 
     Why the corpus and not the store's own batches: a Bloom word table
     is a LOSSY projection (Bloom 1970) — the set bits of an m-bit
@@ -1282,154 +1189,31 @@ def grow_bloom_store(df: DataFrame, value_col: str, path: str, *,
     the compaction-style consolidation of that layout.
 
     The group layout (``by``) is preserved; ``k`` may be retuned at
-    the same time (more bits per element affords a higher k).
-
-    Concurrency contract (ADVICE r15): the flip tolerates any number
-    of concurrent READERS (they heal, we retry) but exactly ONE
-    GROWER — two interleaved growers could rmtree each other's
-    just-flipped live store.  A ``.growlock`` sentinel directory
-    (atomic ``mkdir``) now ENFORCES that: a second grower fails
-    loudly instead of corrupting.  A lock left by a crashed grower on
-    the SAME host is stolen when its recorded pid is dead OR when the
-    pid was recycled by an unrelated process (the owner records a
-    kernel start-time token alongside the pid — ADVICE r16); across
-    hosts (shared filesystem) pid liveness is meaningless, so a
-    foreign-host lock is never stolen — remove it manually after
-    confirming the grower died.  Readers ignore the lock entirely.
-    Steal protocol: rename-aside (one winner) + owner re-validation
-    with restore-on-mismatch, so a stalled recoverer can neither
-    delete nor keep a LIVE grower's lock; the residual window
-    (recoverer pauses between liveness check and rename while the
-    winner completes steal+reacquire+crash+third-party-mkdir) needs
-    three interleaved failures inside microseconds and is accepted —
-    directory locks without fencing tokens cannot close it, and the
-    flip itself remains reader-healable either way."""
+    the same time (more bits per element affords a higher k)."""
     import json
     import os
     import shutil
-    import socket
 
-    import uuid as _uuid
-
-    lock = path + ".growlock"
-    me = {"pid": os.getpid(), "host": socket.gethostname(),
-          "start": _proc_start_token(os.getpid())}
-    for attempt in range(2):
-        try:
-            os.mkdir(lock)
-            break
-        except FileExistsError:
-            holder: dict = {}
-            try:
-                with open(os.path.join(lock, "owner.json")) as fh:
-                    holder = json.load(fh)
-            except (OSError, ValueError):
-                pass    # owner file not landed yet / gone / mid-write
-            stale = False
-            if holder.get("host") == me["host"] and attempt == 0:
-                try:
-                    hpid = int(holder.get("pid", -1))
-                    os.kill(hpid, 0)
-                    # pid alive — but is it the SAME process?  A
-                    # recycled pid belonging to an unrelated live
-                    # process would otherwise hold a crashed grower's
-                    # lock forever (ADVICE r16).  Kernel start-time
-                    # tokens disambiguate; comparison only when BOTH
-                    # sides have one (old-format locks and non-Linux
-                    # hosts keep the conservative pid-only verdict).
-                    hstart = holder.get("start")
-                    cur = _proc_start_token(hpid)
-                    if (hstart is not None and cur is not None
-                            and hstart != cur):
-                        stale = True    # recycled pid: owner is dead
-                except (OSError, ValueError):
-                    stale = True    # same-host pid is dead: steal
-            if not stale:
-                raise OSError(
-                    f"grow_bloom_store: another grower holds {lock} "
-                    f"(owner {holder or 'unknown'}); concurrent "
-                    "growth is unsupported — wait for it, or remove "
-                    "the lock manually if that grower is dead")
-            # ATOMIC steal (r16 review): rename the stale lock aside —
-            # exactly one of N concurrent recoverers wins the rename
-            # and proceeds to re-acquire; the losers' renames fail and
-            # they see the winner's fresh lock as live contention.  A
-            # check-then-rmtree steal here would let a second
-            # recoverer delete the winner's just-acquired lock — the
-            # precise two-grower hole the lock exists to close.
-            grave = f"{lock}.stale.{_uuid.uuid4().hex}"
-            try:
-                os.rename(lock, grave)
-            except OSError:
-                raise OSError(
-                    f"grow_bloom_store: another grower is recovering "
-                    f"{lock} concurrently; retry after it finishes"
-                ) from None
-            # TOCTOU closure (second review pass): a recoverer that
-            # stalled between its liveness check and its rename could
-            # have renamed the WINNER'S fresh live lock, not the stale
-            # one it observed.  Re-validate the captured dir: if its
-            # owner is not the dead holder we checked, put it back and
-            # report contention — never destroy a live grower's lock.
-            taken: dict = {}
-            try:
-                with open(os.path.join(grave, "owner.json")) as fh:
-                    taken = json.load(fh)
-            except (OSError, ValueError):
-                pass
-            if taken != holder:
-                try:
-                    os.rename(grave, lock)   # restore the live lock
-                except OSError:
-                    shutil.rmtree(grave, ignore_errors=True)
-                raise OSError(
-                    f"grow_bloom_store: lost the {lock} recovery race "
-                    "to a live grower; retry after it finishes")
-            shutil.rmtree(grave, ignore_errors=True)
-    else:
-        raise OSError(f"grow_bloom_store: could not acquire {lock}")
-    try:
-        with open(os.path.join(lock, "owner.json"), "w") as fh:
-            json.dump(me, fh)
-        p = _bloom_store_params(path)
-        new_m = int(m_bits or 4 * p["m_bits"])
-        new_k = int(k or p["k"])
-        if new_m <= p["m_bits"]:
-            raise ValueError(
-                f"grow_bloom_store: new m_bits {new_m} must exceed "
-                f"the current {p['m_bits']} (shrinking a filter "
-                "re-raises the fpr this rebuild exists to cut)")
-        scratch = path + ".grow"
-        shutil.rmtree(scratch, ignore_errors=True)
-        build_bloom_store(df, value_col, scratch, p["by"] or None,
-                          m_bits=new_m, k=new_k)
-        old = path + ".pregrow"
-        shutil.rmtree(old, ignore_errors=True)
-        # The flip retries: a concurrent reader landing in the rename
-        # gap HEALS the store (renames .pregrow back to the canonical
-        # path), which makes our second rename fail — move the old
-        # store aside again and retry.  Bounded attempts; the store is
-        # healthy at every exit (either the new filter flipped in, or
-        # the old one is back at the canonical path).
-        for _ in range(8):
-            try:
-                os.rename(path, old)
-            except FileNotFoundError:
-                pass            # a previous attempt already moved it
-            try:
-                os.rename(scratch, path)
-                break
-            except OSError:
-                continue        # a reader healed mid-gap: retry
-        else:
-            raise OSError(
-                f"grow_bloom_store: could not flip {scratch} into "
-                f"place after 8 attempts (pathological reader "
-                "contention)")
-        shutil.rmtree(old, ignore_errors=True)
-        return new_m
-    finally:
-        shutil.rmtree(lock, ignore_errors=True)
+    gen, d, _ = store.resolve_generation(path, ".")
+    with open(os.path.join(d, "params.json")) as f:
+        p = json.load(f)
+    new_m = int(m_bits or 4 * p["m_bits"])
+    new_k = int(k or p["k"])
+    if new_m <= p["m_bits"]:
+        raise ValueError(
+            f"grow_bloom_store: new m_bits {new_m} must exceed "
+            f"the current {p['m_bits']} (shrinking a filter "
+            "re-raises the fpr this rebuild exists to cut)")
+    ndir = store.new_generation_dir(path, gen + 1)
+    build_bloom_store(df, value_col, ndir, p["by"] or None,
+                      m_bits=new_m, k=new_k)
+    store.flip_generation(path, gen + 1, ndir)
+    store.vacuum_generations(path, ".", keep=2)
+    if gen >= 1:
+        # generation 0 is the filter in the store root (params.json
+        # stays: it marks the store as built)
+        shutil.rmtree(os.path.join(path, "words"), ignore_errors=True)
+    return new_m
 
 
 # ---------------------------------------------------------------------- #

@@ -393,10 +393,12 @@ def countmin_sketch_sink(stream_df: DataFrame, value_col: str,
     replayed epoch that re-appended would DOUBLE-COUNT (max-merge
     would have shrugged).  The store's first-publish-wins rename makes
     the replay a no-op instead — the same epoch id can only ever
-    publish once, and a torn pre-publish write is invisible (staging
-    dirs are never read).  Single-writer contract: pause the stream
-    before ``compact_countmin_store`` (an append publishing into the
-    old generation while the pointer flips would strand its counts).
+    publish once, also after a compaction folded it (the generation
+    pointer records the folded ids), and a torn pre-publish write is
+    invisible (staging dirs are never read).  Single-writer contract:
+    pause the stream before ``compact_countmin_store`` (an append
+    publishing into the old generation while the pointer flips would
+    strand its counts).
 
     Returns the started StreamingQuery.  Bootstrap the store first
     with ``build_countmin_store`` (or an empty frame); query it any
@@ -429,10 +431,12 @@ def text_index_sink(stream_df: DataFrame, store_path: str,
 
     Exactly-once: structured streaming already delivers each document
     to exactly one epoch, epochs are therefore doc-disjoint (the index
-    store's batch contract), and a checkpoint-replayed epoch OVERWRITES
-    its own batch dirs with identical postings — the same structural
-    replay-idempotence as ``hll_sketch_sink``.  Bootstrap the store
-    with ``build_text_index`` first; query any time with
+    store's batch contract), and a checkpoint-replayed epoch is
+    refused by the store's first-publish-wins batch publish — also
+    after a compaction folded it.  Single-writer contract as for
+    ``countmin_sketch_sink``: pause the stream before
+    ``compact_text_index``.  Bootstrap the store with
+    ``build_text_index`` first; query any time with
     ``text_index_topk``."""
     from ..operators.search import append_text_index
 

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from .schema import ColumnType, PartitionBy, Schema
+from .store import latest_version, publish_version, read_version
 
 __all__ = ["Table", "TableExistsError", "TableNotFoundError", "OutOfOrderError",
            "zdb_home"]
@@ -274,7 +275,7 @@ class Table:
             head = {"txns": raw.get("txns") or {},
                     "row_count": raw.get("row_count", 0),
                     "min_ts": raw.get("min_ts"), "max_ts": raw.get("max_ts")}
-            self._try_publish_manifest(1, self._head_from_files(
+            publish_version(self._manifest_dir(), 1, self._head_from_files(
                 files, head, self._collect_file_stats(p, files)))
         with self._meta_lock():
             self._reload_meta()
@@ -719,18 +720,12 @@ class Table:
         parse each snapshot exactly once.
         """
         d = self._manifest_dir()
-        if not os.path.isdir(d):
+        v = latest_version(d)
+        if v < 0:
             return 0, dict(self._EMPTY_HEAD, segments=[], tail=[], txns={})
-        versions = [
-            int(f[1:-5]) for f in os.listdir(d)
-            if f.startswith("v") and f.endswith(".json")]
-        if not versions:
-            return 0, dict(self._EMPTY_HEAD, segments=[], tail=[], txns={})
-        v = max(versions)
         cached = getattr(self, "_head_cache", None)
         if cached is None or cached[0] != v:
-            with open(os.path.join(d, f"v{v:012d}.json")) as f:
-                cached = (v, self._normalize_head(json.load(f)))
+            cached = (v, self._normalize_head(read_version(d, v)))
             self._head_cache = cached
         head = cached[1]
         # defensive copy: update fns build new dicts but must never
@@ -852,9 +847,10 @@ class Table:
         file exists to leak, block, or be stolen; abandoned writers cost
         nothing.  On an object store the exclusive create maps to a
         conditional PUT (S3 ``If-None-Match: *``, GCS
-        ``ifGenerationMatch=0``); on POSIX it is ``os.link`` from a
-        private tmp (atomic even over NFS, and it can never silently
-        OVERWRITE a concurrent winner the way ``rename`` would).
+        ``ifGenerationMatch=0``); on POSIX it is a hard link from a
+        private tmp (``store.publish_version``: atomic even over NFS,
+        and it can never silently OVERWRITE a concurrent winner the way
+        ``rename`` would).
 
         Returns the committed version, or None if ``update_fn`` aborted.
         """
@@ -866,7 +862,7 @@ class Table:
             nh = update_fn(head)
             if nh is None:
                 return None
-            if self._try_publish_manifest(v + 1, nh):
+            if publish_version(self._manifest_dir(), v + 1, nh):
                 # memoize the winner: the next metadata read needs no parse
                 self._head_cache = (v + 1, self._normalize_head(nh))
                 return v + 1
@@ -896,31 +892,6 @@ class Table:
             return nh
 
         return self._commit_manifest_head(head_fn, max_retries)
-
-    def _try_publish_manifest(self, version: int, doc: dict) -> bool:
-        """Publish ``v{version}.json`` iff it does not exist yet.
-
-        Write a uniquely-named tmp (fsync'd), then ``os.link`` it to the
-        version name — hard-link creation fails with EEXIST if another
-        writer won the version, which IS the compare-and-swap.  The tmp
-        is always unlinked; a crash between write and link leaves only a
-        ``.tmp`` orphan that ``vacuum()`` sweeps.
-        """
-        d = self._manifest_dir()
-        os.makedirs(d, exist_ok=True)
-        tmp = os.path.join(d, f".v{version:012d}.{uuid.uuid4().hex}.tmp")
-        with open(tmp, "w") as f:
-            json.dump(doc, f)
-            f.flush()
-            os.fsync(f.fileno())
-        target = os.path.join(d, f"v{version:012d}.json")
-        try:
-            os.link(tmp, target)
-            return True
-        except FileExistsError:
-            return False
-        finally:
-            os.unlink(tmp)
 
     def _version_files(self, version: int) -> list[str]:
         """Manifest-relative file list of snapshot ``version`` (loud on
